@@ -97,7 +97,6 @@ SQL_METRICS = {
     "data returned from Python workers": "py_bytes_out",
     "time to run Python workers": "py_run_s",
     "time to initialize Python workers": "py_init_s",
-    "time to start Python workers": "py_start_s",
 }
 
 
@@ -137,8 +136,6 @@ def spark_metrics_by_group(spark) -> dict[str, dict[str, float]]:
         if group is None:
             continue
         add(group, "tasks", st.numCompleteTasks())
-        add(group, "executor_run_s", st.executorRunTime() / 1e3)
-        add(group, "executor_cpu_s", st.executorCpuTime() / 1e9)
         add(group, "shuffle_write_bytes", st.shuffleWriteBytes())
         add(group, "shuffle_read_bytes", st.shuffleReadBytes())
 

@@ -1,17 +1,17 @@
 """Run sets of benchmark runs and summarize their spread.
 
-    python3 perfbench/report.py --workloads build,probe,update --seeds 1-10 \\
-        --out perfbench/baseline/set_a.json
-    python3 perfbench/report.py --workloads build,probe,update --seeds 1 \\
-        --trace 1 --untraced perfbench/baseline/set_a.json \\
+    python3 perfbench/report.py --seeds 1-10 --out perfbench/baseline/set_a.json
+    python3 perfbench/report.py --seeds 1 --trace 1 \\
+        --untraced perfbench/baseline/set_a.json \\
         --out perfbench/baseline/traced.json
 
-Each run is ``perfbench/run.py`` in a child process with the seconds from
-``BENCHMARK.json``.  For every workload and end-to-end metric the summary
-gives the median, the quartiles (``statistics.quantiles(values, n=4)``)
-and the spread, (Q3 - Q1) / median, next to the metric's bound.  A traced
-set also keeps each run's layer table and, given an untraced set, the
-tracing overhead: traced end-to-end value / untraced median - 1.
+Each run is ``perfbench/run.py`` in a child process, for every workload
+and with the seconds in ``BENCHMARK.json``.  For every workload and
+end-to-end metric the summary gives the median, the quartiles
+(``statistics.quantiles(values, n=4)``) and the spread, (Q3 - Q1) /
+median, next to the metric's bound.  A traced set also keeps each run's
+layer table and, given an untraced set, the tracing overhead: traced
+end-to-end value / untraced median - 1.
 """
 
 from __future__ import annotations
@@ -67,7 +67,6 @@ def run_one(workload: str, seed: int, seconds: int, trace: int) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workloads", default="build,probe,update")
     ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--trace", type=int, default=0)
     ap.add_argument("--untraced", help="untraced set to compare a traced set with")
@@ -83,7 +82,7 @@ def main() -> None:
             base = json.load(f)["workloads"]
 
     out = {"seconds": bench["run_seconds"], "trace": args.trace, "workloads": {}}
-    for w in args.workloads.split(","):
+    for w in (wl["name"] for wl in bench["workloads"]):
         runs = []
         for s in seeds(args.seeds):
             r = run_one(w, s, bench["run_seconds"], args.trace)

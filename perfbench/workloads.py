@@ -37,14 +37,19 @@ FPP_SIGMAS = 5.0
 # keeping the ratios that decide which layer does the work (distinct :
 # duplicate rows, bank : probe rows, contains : join calls, keys per update
 # shard, rebuilt keys per new key).  Auto-sharded
-# key counts sit mid-way between the shard-count steps (64k keys per xor8
-# shard, 1M per fuse8 shard), so the ~5% error of the HLL estimate that
-# picks the count never flips it between seeds.
-BUILD_KEYS = 375_000            # distinct keys (8 xor8 shards, 1 fuse8 shard)
+# key counts sit mid-way between the shard-count steps, so the ~5% error of
+# the HLL estimate that picks the count never flips it between seeds.
+BUILD_KEYS = 375_000            # distinct keys
 BUILD_DUPLICATES = 93_750       # duplicate rows, 4 : 1 as in 8M : 2M
+# Keys per shard for the build workload.  xor8 keeps build_bank's default
+# (64k keys, the peel's L2-resident working set): 8 shards of ~47k keys.
+# fuse8's default (1M keys) is divided by 16, so its bank also gets 8
+# shards, two per core as 8M keys give at the default, instead of one
+# shard peeled on one core.
+BUILD_SHARD_TARGET = {"xor8": None, "fuse8": 62_500}
 BUILD_SAMPLE = BUILD_KEYS // 40  # members probed per bank (200k of 8M)
 BUILD_NONMEMBERS = 250_000      # non-members probed per bank, for the FPP
-PROBE_BANK_KEYS = 187_500       # 4 xor8 shards
+PROBE_BANK_KEYS = 187_500       # 4 xor8 shards at the default target
 PROBE_ROWS = 187_500            # per probe table, half members
 PROBE_CONTAINS_PER_ROUND = 3    # about 10 : 4 contains : contains_join
 PROBE_JOINS_PER_ROUND = 1
@@ -133,27 +138,36 @@ class Ops:
         return kw
 
     # -- build ------------------------------------------------------------
-    def build(self, df, variant: str, distinct: int):
-        """``build_bank`` (auto-sharded) materialized with cache + count."""
+    def build(self, df, variant: str, distinct: int, target: int | None = None):
+        """``build_bank`` (auto-sharded, ``target`` keys per shard or the
+        library's default) materialized with cache + count."""
         with self.tr.span("build.call", variant=variant) as call:
-            bank = B.build_bank(df, "key", variant=variant)
+            bank = B.build_bank(df, "key", variant=variant,
+                                target_keys_per_shard=target)
         with self.tr.span("build.action", variant=variant) as action:
             bank = bank.cache()
             shards = bank.count()
-        with self.tr.span("check.collect"):
-            rows = bank.collect()
-        self.check(sum(r["num_keys"] for r in rows) == distinct,
-                   f"{variant} bank holds {distinct} keys")
         rec = self.record(
             op="build", variant=variant, keys=distinct, shards=shards,
             wall_s=call.wall + action.wall, cpu_s=call.cpu() + action.cpu(),
+            spans=[call.idx, action.idx],
+        )
+        return bank, rec
+
+    def check_build(self, bank, rec: dict) -> list:
+        """Collect a built bank outside the timed calls: it must hold the
+        distinct keys it was built from; its rows fill in ``rec``."""
+        with self.tr.span("check.collect"):
+            rows = bank.collect()
+        self.check(sum(r["num_keys"] for r in rows) == rec["keys"],
+                   f"{rec['variant']} bank holds {rec['keys']} keys")
+        rec.update(
             fp_bytes=sum(len(r["fingerprints"]) for r in rows),
             duplicates=sum(r["duplicates"] for r in rows),
             retries=sum(r["retries"] for r in rows),
             kernel_ms=sum(r["build_ms"] for r in rows),
-            spans=[call.idx, action.idx],
         )
-        return bank, rows, rec
+        return rows
 
     def check_size(self, bank, what: str) -> None:
         with self.tr.span("check.size"):
@@ -203,11 +217,14 @@ class Ops:
         )
 
     # -- persistence ------------------------------------------------------
-    def persist_round_trip(self, bank, rows) -> dict:
-        """Parquet and ^TL2 round trips, byte-identical per shard."""
-        want = {int(r["shard"]): bytes(r["fingerprints"]) for r in rows}
-        pq = os.path.join(self.work, "bank.parquet")
-        tl2 = os.path.join(self.work, "bank.tl2")
+    def _persist_paths(self) -> tuple[str, str]:
+        return (os.path.join(self.work, "bank.parquet"),
+                os.path.join(self.work, "bank.tl2"))
+
+    def persist_round_trip(self, bank) -> tuple[dict, dict]:
+        """Parquet and ^TL2 round trips; returns the record and the shards
+        read back, for ``check_round_trip``."""
+        pq, tl2 = self._persist_paths()
         shutil.rmtree(tl2, ignore_errors=True)
         with self.tr.span("persist.parquet_write") as pw:
             B.write_bank(bank, pq)
@@ -217,17 +234,23 @@ class Ops:
             files = B.write_bank_tl2(bank, tl2)
         with self.tr.span("persist.tl2_read") as tr_:
             got_tl2 = B.read_bank_tl2(self.spark, tl2).select("shard", "fingerprints").collect()
-        for fmt, got in (("parquet", got_pq), ("tl2", got_tl2)):
-            same = {int(r["shard"]): bytes(r["fingerprints"]) for r in got} == want
-            self.check(same, f"{fmt} round trip is byte-identical per shard")
-        fp_bytes = sum(len(v) for v in want.values())
-        return self.record(
-            op="persist", fp_bytes=fp_bytes, files=files,
-            disk_bytes=dir_bytes(pq) + dir_bytes(tl2),
+        rec = self.record(
+            op="persist", files=files,
             parquet_write_s=pw.wall, parquet_read_s=pr.wall,
             tl2_write_s=tw.wall, tl2_read_s=tr_.wall,
             wall_s=pw.wall + pr.wall + tw.wall + tr_.wall,
         )
+        return rec, {"parquet": got_pq, "tl2": got_tl2}
+
+    def check_round_trip(self, rec: dict, got: dict, rows) -> None:
+        """Both round trips byte-identical per shard to the bank's ``rows``;
+        fills in the record's fingerprint and disk bytes."""
+        want = {int(r["shard"]): bytes(r["fingerprints"]) for r in rows}
+        for fmt, back in got.items():
+            same = {int(r["shard"]): bytes(r["fingerprints"]) for r in back} == want
+            self.check(same, f"{fmt} round trip is byte-identical per shard")
+        rec.update(fp_bytes=sum(len(v) for v in want.values()),
+                   disk_bytes=sum(dir_bytes(p) for p in self._persist_paths()))
 
 
 def dir_bytes(path: str) -> int:
@@ -288,7 +311,8 @@ def _unpersist(*dfs) -> None:
 def workload_build(spark, ops: Ops, seed: int, seconds: float) -> dict:
     """Per round: auto-sharded xor8 and fuse8 builds over the same keys,
     parquet and ^TL2 round trips of the xor8 bank, and a member sample
-    plus non-members probed against both banks."""
+    plus non-members probed against both banks.  The banks are collected
+    and checked after the round."""
     tr = ops.tr
 
     def setup(prev):
@@ -303,18 +327,22 @@ def workload_build(spark, ops: Ops, seed: int, seconds: float) -> dict:
         return keys, sample
 
     keys, sample = setup_reps(tr, setup)
-    banks = {}
+    state = {}
 
     def body(i):
-        xb, xrows, xrec = ops.build(keys, "xor8", BUILD_KEYS)
-        fb, _, frec = ops.build(keys, "fuse8", BUILD_KEYS)
-        banks.update(xor8=xb, fuse8=fb)
-        ops.persist_round_trip(xb, xrows)
-        ops.contains(sample, xb, "xor8", xrec["fp_bytes"])
-        ops.contains(sample, fb, "fuse8", frec["fp_bytes"])
+        built = {v: ops.build(keys, v, BUILD_KEYS, BUILD_SHARD_TARGET[v])
+                 for v in ("xor8", "fuse8")}
+        persisted = ops.persist_round_trip(built["xor8"][0])
+        probes = {v: ops.contains(sample, bank, v, None)  # bytes set in after()
+                  for v, (bank, _) in built.items()}
+        state.update(built=built, persisted=persisted, probes=probes)
 
     def after(i):
-        for variant, bank in banks.items():
+        for variant, (bank, rec) in state["built"].items():
+            rows = ops.check_build(bank, rec)
+            state["probes"][variant]["bank_bytes"] = rec["fp_bytes"]
+            if variant == "xor8":
+                ops.check_round_trip(*state["persisted"], rows)
             ops.check_size(bank, f"{variant} bank")
             bank.unpersist()
 
@@ -337,7 +365,8 @@ def workload_probe(spark, ops: Ops, seed: int, seconds: float) -> dict:
         with tr.span("input.keys"):
             keys = keys_df(spark, 0, PROBE_BANK_KEYS, seed).cache()
             keys.count()
-        bank, _, rec = ops.build(keys, "xor8", PROBE_BANK_KEYS)
+        bank, rec = ops.build(keys, "xor8", PROBE_BANK_KEYS)
+        ops.check_build(bank, rec)
         ops.check_size(bank, "probe bank")
         return keys, bank, rec
 
