@@ -32,7 +32,7 @@ PAYLOAD_BYTES = 400
 FPP_BOUND = 0.004  # xor8 and fuse8 both sit at 2^-8 = 0.39%
 FPP_SIGMAS = 5.0
 
-# Sizes: the issue's 8M / 4M / 1M-key shapes scaled down so that each
+# Sizes: the 8M / 4M / 1M-key target shapes scaled down so that each
 # workload runs more than one round in a seventeen-second loop on local[4],
 # keeping the ratios that decide which layer does the work (distinct :
 # duplicate rows, bank : probe rows, contains : join calls, keys per update
