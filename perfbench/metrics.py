@@ -32,10 +32,11 @@ def end_to_end(tr: Tracer, records: list[dict], rss_mb: float) -> tuple[dict, di
     setups = [s.wall for s in tr.named("bench.setup")]
     rounds = tr.named("bench.round")
 
-    # xor8 builds: build_bank calls, or the dirty-shard rebuilds of update
+    # xor8 builds: build_bank calls (build), or the set-up's rebuilds of
+    # every shard from the digest log (probe)
     builds = [(r["keys"], r["wall_s"], r["cpu_s"], r["fp_bytes"])
               for r in _ops(records, "build", variant="xor8")]
-    builds += [(r["rebuilt_keys"], r["rebuild_s"], r["rebuild_cpu_s"], r["fp_bytes"])
+    builds += [(r["keys"], r["rebuild_s"], r["rebuild_cpu_s"], r["fp_bytes"])
                for r in _ops(records, "update")]
     probes = _ops(records, "contains")
     membership = [r for r in records if "fp" in r]
@@ -148,12 +149,9 @@ def per_layer(tr: Tracer, records: list[dict], table: dict, kernels: dict,
 
     updates = _ops(records, "update")
     for k, src in (("append_log_s", "append_s"), ("rebuild_s", "rebuild_s"),
-                   ("read_bank_s", "read_s"), ("probe_s", "probe_s"),
-                   ("dirty_shards", "dirty_shards")):
+                   ("read_bank_s", "read_s"), ("dirty_shards", "dirty_shards"),
+                   ("log_bytes", "log_bytes")):
         m[f"update.{k}"] = _mean([r[src] for r in updates])
-    m["update.log_bytes"] = float(updates[-1]["log_bytes"]) if updates else 0.0
-    m["update.rebuilt_keys_per_new_key"] = _mean(
-        [r["rebuilt_keys"] / r["new_keys"] for r in updates])
 
     m["host.steal_share"] = steal
     m["table.attributed_share"] = table["coverage"]

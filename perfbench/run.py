@@ -1,6 +1,6 @@
 """Run one benchmark workload against the xorfilter_spark library.
 
-    python3 perfbench/run.py --workload build --seed 1 --seconds 17 --trace 0
+    python3 perfbench/run.py --workload build --seed 1 --seconds 25 --trace 0
 
 Starts Spark on ``local[4]`` in this process, generates the workload's
 inputs from the seed, runs its set-up and its timed loop, checks every
@@ -90,7 +90,7 @@ def stop_spark(spark, tree) -> None:
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=("build", "probe", "update"))
+    ap.add_argument("--workload", required=True, choices=("build", "probe"))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -112,9 +112,14 @@ def main(argv=None) -> int:
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
-    # every JVM, the launcher's too: temp files here, no /tmp/hsperfdata
+    # every JVM, the launcher's too: temp files here, no /tmp/hsperfdata.
+    # C1 only: with C2 the JVM was still compiling after five timed rounds
+    # (a build's process-tree CPU fell by 40-45% from the first round to
+    # the fifth), so a run's figures depended on how many rounds it fitted;
+    # C1 settles within the warm-up round.
     os.environ["JAVA_TOOL_OPTIONS"] = (
-        f"-XX:-UsePerfData -Djava.io.tmpdir={os.environ['TMPDIR']}")
+        "-XX:-UsePerfData -XX:TieredStopAtLevel=1 "
+        f"-Djava.io.tmpdir={os.environ['TMPDIR']}")
 
     run_id = f"{args.workload}-{args.seed}-{os.getpid()}"
     tree = ProcTree(os.getpid())

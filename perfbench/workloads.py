@@ -1,4 +1,4 @@
-"""The three workloads: build, probe and update.
+"""The two workloads: build and probe.
 
 Every input is generated inside Spark from ``range`` and the run's seed:
 key ``i`` is ``xxhash64(i, seed)``.  Members are keys of ids below the
@@ -26,19 +26,18 @@ from pyspark.sql import functions as F
 from xorfilter_spark import bank as B
 from xorfilter_spark.streaming import incremental as I
 
-SETUP_REPS = 3
+SETUP_REPS = 5
 NON_MEMBER_BASE = 1 << 40
 PAYLOAD_BYTES = 400
 FPP_BOUND = 0.004  # xor8 and fuse8 both sit at 2^-8 = 0.39%
 FPP_SIGMAS = 5.0
 
-# Sizes: the 8M / 4M / 1M-key target shapes scaled down so that each
-# workload runs more than one round in a seventeen-second loop on local[4],
-# keeping the ratios that decide which layer does the work (distinct :
-# duplicate rows, bank : probe rows, contains : join calls, keys per update
-# shard, rebuilt keys per new key).  Auto-sharded
-# key counts sit mid-way between the shard-count steps, so the ~5% error of
-# the HLL estimate that picks the count never flips it between seeds.
+# Sizes: the 8M / 4M-key target shapes scaled down so that a 25-second
+# loop on local[4] holds several rounds of each workload, keeping the
+# ratios that decide which layer does the work (distinct : duplicate rows,
+# bank : probe rows, contains : join calls).  Auto-sharded key counts sit
+# mid-way between the shard-count steps, so the ~5% error of the HLL
+# estimate that picks the count never flips it between seeds.
 BUILD_KEYS = 375_000            # distinct keys
 BUILD_DUPLICATES = 93_750       # duplicate rows, 4 : 1 as in 8M : 2M
 # Keys per shard for the build workload.  xor8 keeps build_bank's default
@@ -49,15 +48,12 @@ BUILD_DUPLICATES = 93_750       # duplicate rows, 4 : 1 as in 8M : 2M
 BUILD_SHARD_TARGET = {"xor8": None, "fuse8": 62_500}
 BUILD_SAMPLE = BUILD_KEYS // 40  # members probed per bank (200k of 8M)
 BUILD_NONMEMBERS = 250_000      # non-members probed per bank, for the FPP
-PROBE_BANK_KEYS = 187_500       # 4 xor8 shards at the default target
+PROBE_BANK_KEYS = 187_500
+PROBE_SHARDS = 4                # what build_bank's default target gives
 PROBE_ROWS = 187_500            # per probe table, half members
 PROBE_CONTAINS_PER_ROUND = 3    # about 10 : 4 contains : contains_join
 PROBE_JOINS_PER_ROUND = 1
 PROBE_HELD_OUT = 375_000        # held-out non-members, once per run
-UPDATE_BANK_KEYS = 250_000      # 1M : 32 shards : 25k batches, over four
-UPDATE_SHARDS = 8
-UPDATE_BATCH = 6_250
-UPDATE_HELD_OUT = 250_000       # held-out non-members, once per run
 
 
 # ---------------------------------------------------------------------------
@@ -151,6 +147,25 @@ class Ops:
             op="build", variant=variant, keys=distinct, shards=shards,
             wall_s=call.wall + action.wall, cpu_s=call.cpu() + action.cpu(),
             spans=[call.idx, action.idx],
+        )
+        return bank, rec
+
+    def incremental_build(self, df, distinct: int, log: str, bank_path: str,
+                          shards: int):
+        """An xor8 bank built through the streaming path: every key of
+        ``df`` appended to an empty digest log, every shard rebuilt from
+        it, and the bank read back, cached and counted."""
+        with self.tr.span("update.append") as ap:
+            dirty = I.append_digest_log(df, "key", log, shards)
+        with self.tr.span("update.rebuild") as rb:
+            I.rebuild_dirty_shards(self.spark, log, bank_path, dirty, num_shards=shards)
+        with self.tr.span("update.read") as rd:
+            bank = B.read_bank(self.spark, bank_path).cache()
+            bank.count()
+        rec = self.record(
+            op="update", variant="xor8", keys=distinct, dirty_shards=len(dirty),
+            append_s=ap.wall, rebuild_s=rb.wall, rebuild_cpu_s=rb.cpu(),
+            read_s=rd.wall, log_bytes=dir_bytes(log),
         )
         return bank, rec
 
@@ -262,7 +277,8 @@ def dir_bytes(path: str) -> int:
 
 def setup_reps(tr, body):
     """Run ``body(previous)`` ``SETUP_REPS`` times in ``bench.setup`` spans;
-    each rep releases the previous rep's state and redoes the work."""
+    each rep releases the previous rep's state and redoes the work.  The
+    first rep runs on a cold JVM; the median is a warm one."""
     state = None
     for rep in range(SETUP_REPS):
         with tr.span("bench.setup", rep=rep):
@@ -274,25 +290,24 @@ def run_rounds(ops: Ops, seconds: float, body, after=None) -> int:
     """One warm-up round in a ``session.warmup`` span, checked but not
     recorded: it starts the Python workers and compiles the JVM code paths
     the rounds take, so the first timed round runs like the rest.  Then a
-    closed loop: ``body(i)`` in a ``bench.round`` span, then the
-    benchmark's checks ``after(i)`` outside it, until the next round, at
-    the median pace so far, would end after ``seconds``."""
+    closed loop: ``body()`` in a ``bench.round`` span, then the benchmark's
+    checks ``after()`` outside it, until the next round, at the median pace
+    so far, would end after ``seconds``."""
     tr = ops.tr
     ops.recording = False
     with tr.span("session.warmup"):
-        body(0)
+        body()
         if after is not None:
-            after(0)
+            after()
     ops.recording = True
     t0 = time.perf_counter()
     paces: list[float] = []
     while True:
-        i = len(paces) + 1
         start = time.perf_counter()
-        with tr.span("bench.round", round=i):
-            body(i)
+        with tr.span("bench.round", round=len(paces) + 1):
+            body()
         if after is not None:
-            after(i)
+            after()
         paces.append(time.perf_counter() - start)
         if time.perf_counter() - t0 + statistics.median(paces) > seconds:
             return len(paces)
@@ -329,7 +344,7 @@ def workload_build(spark, ops: Ops, seed: int, seconds: float) -> dict:
     keys, sample = setup_reps(tr, setup)
     state = {}
 
-    def body(i):
+    def body():
         built = {v: ops.build(keys, v, BUILD_KEYS, BUILD_SHARD_TARGET[v])
                  for v in ("xor8", "fuse8")}
         persisted = ops.persist_round_trip(built["xor8"][0])
@@ -337,7 +352,7 @@ def workload_build(spark, ops: Ops, seed: int, seconds: float) -> dict:
                   for v, (bank, _) in built.items()}
         state.update(built=built, persisted=persisted, probes=probes)
 
-    def after(i):
+    def after():
         for variant, (bank, rec) in state["built"].items():
             rows = ops.check_build(bank, rec)
             state["probes"][variant]["bank_bytes"] = rec["fp_bytes"]
@@ -354,18 +369,25 @@ def workload_build(spark, ops: Ops, seed: int, seconds: float) -> dict:
 
 
 def workload_probe(spark, ops: Ops, seed: int, seconds: float) -> dict:
-    """A fixed xor8 bank built (and probed once) in set-up; per round,
-    ``contains`` over fresh narrow tables and ``contains_join`` over a
-    fresh table with a 400-byte payload, half members each; after the
-    loop, one held-out non-member probe."""
+    """A fixed xor8 bank built in set-up through the streaming path
+    (``append_digest_log`` into an empty log, ``rebuild_dirty_shards`` of
+    every shard, ``read_bank``), cached; per round, ``contains`` over fresh
+    narrow tables and ``contains_join`` over a fresh table with a 400-byte
+    payload, half members each; after the loop, one held-out non-member
+    probe."""
     tr = ops.tr
+    log = os.path.join(ops.work, "digest_log")
+    bank_path = os.path.join(ops.work, "bank")
 
     def setup(prev):
         _unpersist(*(prev or (None, None))[:2])
+        for p in (log, bank_path):
+            shutil.rmtree(p, ignore_errors=True)
         with tr.span("input.keys"):
             keys = keys_df(spark, 0, PROBE_BANK_KEYS, seed).cache()
             keys.count()
-        bank, rec = ops.build(keys, "xor8", PROBE_BANK_KEYS)
+        bank, rec = ops.incremental_build(keys, PROBE_BANK_KEYS, log, bank_path,
+                                          PROBE_SHARDS)
         ops.check_build(bank, rec)
         ops.check_size(bank, "probe bank")
         return keys, bank, rec
@@ -381,7 +403,7 @@ def workload_probe(spark, ops: Ops, seed: int, seconds: float) -> dict:
 
     keys, bank, rec = setup_reps(tr, setup)
 
-    def body(i):
+    def body():
         for _ in range(PROBE_CONTAINS_PER_ROUND):
             ops.contains(fresh(), bank, "xor8", rec["fp_bytes"])
         for _ in range(PROBE_JOINS_PER_ROUND):
@@ -396,87 +418,9 @@ def workload_probe(spark, ops: Ops, seed: int, seconds: float) -> dict:
     return {"rounds": rounds}
 
 
-def workload_update(spark, ops: Ops, seed: int, seconds: float) -> dict:
-    """An ``UPDATE_SHARDS``-shard bank and its digest log persisted in
-    set-up; per round
-    (one micro-batch of new keys): append to the log, rebuild the dirty
-    shards, read the bank back, and probe the batch plus as many
-    non-members.  The next batch starts when the probe has returned.
-    After the loop, one held-out non-member probe of the final bank."""
-    tr = ops.tr
-    log = os.path.join(ops.work, "digest_log")
-    bank_path = os.path.join(ops.work, "bank")
-
-    def setup(prev):
-        _unpersist(prev)
-        for p in (log, bank_path):
-            shutil.rmtree(p, ignore_errors=True)
-        with tr.span("input.keys"):
-            keys = keys_df(spark, 0, UPDATE_BANK_KEYS, seed).cache()
-            keys.count()
-        with tr.span("update.append"):
-            dirty = I.append_digest_log(keys, "key", log, UPDATE_SHARDS)
-        with tr.span("update.rebuild"):
-            I.rebuild_dirty_shards(spark, log, bank_path, dirty,
-                                   num_shards=UPDATE_SHARDS)
-        return keys
-
-    keys = setup_reps(tr, setup)
-    total = [UPDATE_BANK_KEYS]
-    state = {}
-
-    def body(i):
-        lo = UPDATE_BANK_KEYS + i * UPDATE_BATCH
-        batch = keys_df(spark, lo, lo + UPDATE_BATCH, seed)
-        with tr.span("update.append") as ap:
-            dirty = I.append_digest_log(batch, "key", log, UPDATE_SHARDS)
-        with tr.span("update.rebuild") as rb:
-            I.rebuild_dirty_shards(spark, log, bank_path, dirty,
-                                   num_shards=UPDATE_SHARDS)
-        with tr.span("update.read") as rd:
-            bank = B.read_bank(spark, bank_path)
-        table = batch.select("key", F.lit(True).alias("member")).unionByName(
-            keys_df(spark, NON_MEMBER_BASE + lo, NON_MEMBER_BASE + lo + UPDATE_BATCH,
-                    seed).select("key", F.lit(False).alias("member"))
-        )
-        probe = ops.contains(table, bank, "xor8", None)  # bytes set in after()
-        total[0] += UPDATE_BATCH
-        state.update(bank=bank, dirty=dirty, ap=ap, rb=rb, rd=rd, probe=probe)
-
-    def after(i):
-        bank = state["bank"]
-        with tr.span("check.collect"):
-            rows = bank.select("shard", "num_keys", "fingerprints").collect()
-        held = sum(r["num_keys"] for r in rows)
-        ops.check(held == total[0], f"bank holds all {total[0]} keys")
-        dirty = set(state["dirty"])
-        rebuilt = sum(r["num_keys"] for r in rows if r["shard"] in dirty)
-        ops.check_size(bank, "updated bank")
-        rb = state["rb"]
-        fp_bytes = sum(len(r["fingerprints"]) for r in rows)
-        state["probe"]["bank_bytes"] = fp_bytes
-        ops.record(
-            op="update", dirty_shards=len(state["dirty"]),
-            rebuilt_keys=rebuilt, new_keys=UPDATE_BATCH, fp_bytes=fp_bytes,
-            append_s=state["ap"].wall, rebuild_s=rb.wall,
-            rebuild_cpu_s=rb.cpu(), read_s=state["rd"].wall,
-            probe_s=state["probe"]["wall_s"], log_bytes=dir_bytes(log),
-        )
-
-    rounds = run_rounds(ops, seconds, body, after)
-    held_out = probe_table(spark, 0, 1, UPDATE_HELD_OUT,
-                           NON_MEMBER_BASE - UPDATE_HELD_OUT, seed)
-    ops.contains(held_out, B.read_bank(spark, bank_path), "xor8",
-                 state["probe"]["bank_bytes"], tag="held_out")
-    ops.check_fpp("xor8")
-    _unpersist(keys)
-    return {"rounds": rounds}
-
-
 WORKLOADS = {
     "build": workload_build,
     "probe": workload_probe,
-    "update": workload_update,
 }
 
 
