@@ -94,6 +94,22 @@ def test_contains_join_digest_wide_payload_and_duplicates(spark, lineitem):
         assert forced.where(~F.col("hit")).count() == 0
 
 
+@pytest.mark.parametrize("payload", ["rows", "digest"])
+def test_contains_join_empty_bank(spark, payload):
+    """A bank built from no keys has no rows to read its shard count from:
+    contains_join must answer all-False, as contains does, not fail."""
+    b = xb.build_bank(spark.range(0).select(F.col("id").alias("key")), "key")
+    assert b.count() == 0
+    probes = spark.range(100).select(
+        F.col("id").alias("key"), F.lit("x").alias("payload")
+    )
+    got = xb.contains_join(probes, "key", b, "hit", payload=payload)
+    want = xb.contains(probes, "key", b, "hit")
+    assert got.columns == want.columns
+    assert got.orderBy("key").collect() == want.orderBy("key").collect()
+    assert got.where("hit").count() == 0
+
+
 def test_merge_associativity(spark, lineitem):
     full = xb.build_bank(lineitem, "l_orderkey", variant="xor8", num_shards=8)
     parts = [full.where(F.col("shard") == s) for s in range(8)]
