@@ -2,6 +2,7 @@
 plus the incremental filter-bank maintenance loop driven through an actual
 streaming query (foreachBatch), not direct function calls."""
 
+import os
 import time
 
 import pytest
@@ -94,6 +95,31 @@ def test_incremental_bank_via_streaming_query(spark, sf_dir, tmp_path):
     assert B.bank_len(bank) == urls.distinct().count()
     probed = B.contains(urls, "url", bank, "hit")
     assert probed.where(~F.col("hit")).count() == 0
+
+
+def test_rebuild_all_shards_matches_build_bank(spark, tmp_path):
+    """Rebuilding every one of 128 dirty shards runs in ``_build_tasks``
+    tasks, not one per shard, and gives the same shard bytes as a full
+    ``build_bank`` over the same keys."""
+    keys = spark.range(0, 64_000, numPartitions=4).select(F.col("id").alias("key"))
+    log = str(tmp_path / "all_log")
+    bankp = str(tmp_path / "all_bank")
+    dirty = INC.append_digest_log(keys, "key", log, 128)
+    assert len(dirty) == 128
+    INC.rebuild_dirty_shards(spark, log, bankp, dirty, num_shards=128)
+
+    parts = [f for f in os.listdir(bankp) if f.startswith("part-")]
+    assert len(parts) <= B._build_tasks(spark, 128) < 128
+
+    def shard_bytes(bank):
+        return [
+            (r["shard"], r["seed"], bytes(r["fingerprints"]))
+            for r in bank.select("shard", "seed", "fingerprints").orderBy("shard").collect()
+        ]
+
+    built = shard_bytes(B.build_bank(keys, "key", num_shards=128))
+    assert len(built) == 128
+    assert shard_bytes(B.read_bank(spark, bankp)) == built
 
 
 def test_streaming_distinct(spark, sf_dir, tmp_path):
