@@ -609,7 +609,9 @@ def q_stream_stateful_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bank_semi_join_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The non-broadcast probe path (shard-aligned cogroup, contains_join):
     restricted to true members it equals the exact semi-join — the bank
-    shape for filters beyond broadcast limits."""
+    shape for filters beyond broadcast limits.  The explicit payload (the
+    one 'auto' picks for part's wide rows) keeps this small bank on the
+    cogroup plan instead of the broadcast route."""
     part = _read(spark, sf_dir, "part")
     lineitem = _read(spark, sf_dir, "lineitem")
     bank = B.build_bank(lineitem, "l_partkey", variant="xor8", num_shards=8)
@@ -618,7 +620,7 @@ def q_bank_semi_join_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey",
         "left_semi",
     )
-    kept = B.contains_join(members, "p_partkey", bank, "__c")
+    kept = B.contains_join(members, "p_partkey", bank, "__c", payload="digest")
     return (
         kept.where(F.col("__c")).select("p_partkey").orderBy("p_partkey")
     )

@@ -2,11 +2,31 @@
 merge associativity, persistence, resume, shard-join probe path, and the
 exact-oracle relationships (semi-join superset / anti-join subset)."""
 
+import os
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from xorfilter_spark import bank as xb
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextmanager
+def _broadcast_threshold(spark, value):
+    """Set the session's broadcast threshold, restoring it afterwards."""
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD, old)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -80,9 +100,10 @@ def test_contains_join_digest_wide_payload_and_duplicates(spark, lineitem):
     assert got.count() == n
     assert got.where(~F.col("hit")).count() == 0  # all members
     assert set(got.columns) == {"l_partkey", "payload", "hit"}
-    auto_plan = xb.contains_join(
-        probes, "l_partkey", b, "hit", payload="auto"
-    )._jdf.queryExecution().executedPlan().toString()
+    with _broadcast_threshold(spark, "-1"):  # keep 'auto' on the cogroup side
+        auto_plan = _plan(
+            xb.contains_join(probes, "l_partkey", b, "hit", payload="auto")
+        )
     assert "Join" in auto_plan  # auto chose the digest/join-back shape
     # the forced join-back modes must produce identical results to the
     # default AQE-decided join-back
@@ -92,6 +113,63 @@ def test_contains_join_digest_wide_payload_and_duplicates(spark, lineitem):
         )
         assert forced.count() == n
         assert forced.where(~F.col("hit")).count() == 0
+
+
+@pytest.mark.parametrize("variant", xb.VARIANTS)
+def test_contains_join_cogroup_matches_contains(spark, lineitem, variant):
+    """With routing off, every cogroup payload answers through the flat
+    lookup kernel exactly as the broadcast ``contains`` does: members,
+    false positives and null keys, for every variant.  'auto' picks
+    'rows' on the key-only table and 'digest' on the wide one."""
+    b = xb.build_bank(lineitem, "l_partkey", variant=variant, num_shards=4)
+    members = lineitem.select(F.col("l_partkey").cast("long").alias("key")).distinct()
+    narrow = members.union(spark.range(10**9, 10**9 + 20_000).toDF("key")).union(
+        spark.range(1).select(F.lit(None).cast("long").alias("key"))
+    )
+    wide = narrow.withColumn("payload", F.repeat(F.lit("x"), 100))
+    cases = [(wide, "rows", False), (wide, "digest", True),
+             (wide, "auto", True), (narrow, "auto", False)]
+    with _broadcast_threshold(spark, "-1"):
+        for probes, payload, join_back in cases:
+            want = xb.contains(probes, "key", b, "hit").orderBy("key").collect()
+            assert sum(r["hit"] for r in want) >= members.count()
+            out = xb.contains_join(probes, "key", b, "hit", payload=payload)
+            plan = _plan(out)
+            assert "FlatMapCoGroupsInPandas" in plan
+            assert ("Join" in plan) == join_back, (payload, probes.columns)
+            assert out.orderBy("key").collect() == want, (payload, probes.columns)
+
+
+def test_contains_join_routes_small_bank_to_broadcast(spark, lineitem):
+    """Under the default threshold a small bank takes the broadcast probe
+    (a Python eval node, no cogroup); threshold -1 or an explicit payload
+    or join_back keeps the cogroup plan.  Every shape answers alike with
+    the same schema, and repeated routed calls on one bank reuse one
+    broadcast instead of leaving a driver temp file each."""
+    b = xb.build_bank(lineitem, "l_partkey", variant="xor8", num_shards=4)
+    probes = lineitem.select("l_partkey", F.repeat(F.lit("x"), 200).alias("payload"))
+    want = xb.contains(probes, "l_partkey", b, "hit").orderBy("l_partkey").collect()
+    schema = xb.contains_join(probes, "l_partkey", b, "hit", payload="rows").schema
+    assert not schema["hit"].nullable
+
+    def probe(**kw):
+        out = xb.contains_join(probes, "l_partkey", b, "hit", **kw)
+        assert out.schema == schema, kw
+        assert out.orderBy("l_partkey").collect() == want, kw
+        return _plan(out)
+
+    routed = probe()
+    assert "EvalPython" in routed
+    assert "FlatMapCoGroupsInPandas" not in routed
+    temp_dir = spark.sparkContext._temp_dir
+    n_files = len(os.listdir(temp_dir))
+    for _ in range(3):
+        assert "FlatMapCoGroupsInPandas" not in probe()
+    assert len(os.listdir(temp_dir)) == n_files
+    assert "FlatMapCoGroupsInPandas" in probe(payload="digest")
+    assert "FlatMapCoGroupsInPandas" in probe(join_back="broadcast")
+    with _broadcast_threshold(spark, "-1"):
+        assert "FlatMapCoGroupsInPandas" in probe()
 
 
 @pytest.mark.parametrize("payload", ["rows", "digest"])

@@ -12,7 +12,8 @@ This maps the reference's builder/filter lifecycle
 - ``Xor8Builder::populate/build``      -> ``build_bank(df, key_col, ...)``
 - ``Xor8::contains``                   -> ``contains(df, key_col, bank)``
   (broadcast fast path) / ``contains_join`` (shard-aligned cogroup path for
-  banks too large to broadcast)
+  banks too large to broadcast; by default it routes a bank under Spark's
+  ``autoBroadcastJoinThreshold`` to ``contains``)
 - ``Xor8::len``                        -> ``bank_len(bank_df)``
 - ``write_file``/``read_file``         -> ``write_bank``/``read_bank``
   (parquet checkpoint table with per-shard lineage)
@@ -32,12 +33,16 @@ Scale notes (designed for ~10^12 keys / 1000 executors):
   concatenation.
 - the probe is a broadcast of (seed + fingerprint arrays) plus a vectorized
   three-gather XOR per batch; for banks beyond broadcast limits use
-  ``contains_join`` which co-partitions probes and bank rows by shard.
+  ``contains_join`` which co-partitions probes and bank rows by shard (and
+  broadcasts, like Spark's join planner, when the bank's size estimate is
+  within ``autoBroadcastJoinThreshold``).  Both paths answer with the same
+  flat lookup kernel, ``_lookup_flat``.
 """
 
 from __future__ import annotations
 
 import time
+import weakref
 from typing import Iterator
 
 import numpy as np
@@ -46,8 +51,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .kernels.fuse import build_fuse, lookup_fuse
-from .kernels.xor8 import build_xor8, lookup_xor8
+from .kernels.fuse import build_fuse
+from .kernels.xor8 import build_xor8
 
 DIGEST = "__digest"
 SHARD = "__shard"
@@ -529,34 +534,6 @@ def bank_expected_size_bytes(bank: DataFrame) -> int:
 # probe
 # ---------------------------------------------------------------------------
 
-def _bank_to_dict(rows) -> dict:
-    out = {}
-    for r in rows:
-        fp_dtype = np.uint8 if r["fp_bits"] == 8 else np.dtype("<u2")
-        out[int(r["shard"])] = {
-            "variant": r["variant"],
-            "seed": _to_u64(int(r["seed"])),
-            "block_length": r["block_length"],
-            "segment_length": r["segment_length"],
-            "segment_count": r["segment_count"],
-            "fingerprints": np.frombuffer(r["fingerprints"], dtype=fp_dtype),
-        }
-    return out
-
-
-def _lookup_shard(entry: dict, digests: np.ndarray) -> np.ndarray:
-    if entry["variant"].startswith("xor"):
-        return lookup_xor8(digests, entry["seed"], entry["block_length"], entry["fingerprints"])
-    return lookup_fuse(
-        digests,
-        entry["seed"],
-        entry["segment_length"],
-        entry["segment_count"],
-        entry["fingerprints"],
-        arity=_fuse_params(entry["variant"])[1],
-    )
-
-
 def _bank_to_flat(rows) -> dict:
     """Flatten bank rows into per-shard parallel numpy arrays + ONE
     concatenated fingerprint buffer, so a mixed-shard probe batch needs no
@@ -610,15 +587,23 @@ def _bank_to_flat(rows) -> dict:
     }
 
 
-def _lookup_flat(flat: dict, digests_i64: np.ndarray) -> np.ndarray:
+def _lookup_flat(
+    flat: dict, digests_i64: np.ndarray, shard: int | None = None
+) -> np.ndarray:
     """Single-pass vectorized membership for a mixed-shard digest batch:
     per-row parameter gathers + elementwise hash math + 3 fingerprint
-    gathers.  No sort, no per-shard slicing, no Python loop."""
+    gathers.  No sort, no per-shard slicing, no Python loop.
+
+    ``shard`` declares that every digest belongs to that one shard (a
+    cogroup group): the shard's parameters are then scalars and the
+    per-row gathers, which cost more than the hash math, are skipped."""
     from .hashing import mulhi, murmur64, rotl64
 
     u = digests_i64.astype(np.uint64)
     k = flat["k"]
-    if k:
+    if shard is not None:
+        s = shard
+    elif k:
         s = (u >> np.uint64(64 - k)).astype(np.int64)
     else:
         s = np.zeros(u.size, dtype=np.int64)
@@ -687,9 +672,13 @@ def contains(
     rows = bank.collect()
     if not rows:
         return df.withColumn(out_col, F.lit(False))
+    b = df.sparkSession.sparkContext.broadcast(_bank_to_flat(rows))
     hash_strategy = rows[0]["hash_strategy"]
-    spark = df.sparkSession
-    b = spark.sparkContext.broadcast(_bank_to_flat(rows))
+    return df.withColumn(out_col, _broadcast_probe(key_col, hash_strategy, b))
+
+
+def _broadcast_probe(key_col: str, hash_strategy: str, b) -> Column:
+    """Membership column over the broadcast flat bank ``b``."""
 
     @F.pandas_udf(T.BooleanType())
     def _probe(digests: pd.Series) -> pd.Series:
@@ -697,11 +686,36 @@ def contains(
         return pd.Series(_lookup_flat(b.value, d))
 
     dig = digest_col(key_col, hash_strategy)
+    return F.when(dig.isNull(), F.lit(False)).otherwise(
+        _probe(F.coalesce(dig, F.lit(0)))
+    )
+
+
+# contains_join's broadcast route keeps one (hash_strategy, Broadcast) per
+# bank DataFrame, so repeated joins on one bank collect, flatten and
+# broadcast it once.  A Broadcast is never destroyed here: a joined
+# DataFrame may outlive its bank object and still need it.
+_ROUTED_BANKS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _contains_routed(
+    df: DataFrame, key_col: str, bank: DataFrame, out_col: str
+) -> DataFrame:
+    """``contains`` with the bank broadcast once per bank DataFrame, and a
+    non-null ``out_col`` like the cogroup plans'."""
+    state = _ROUTED_BANKS.get(bank)
+    if state is None:
+        rows = bank.collect()
+        sc = df.sparkSession.sparkContext
+        b = sc.broadcast(_bank_to_flat(rows)) if rows else None
+        state = (rows[0]["hash_strategy"] if rows else None, b)
+        _ROUTED_BANKS[bank] = state
+    hash_strategy, b = state
+    if b is None:
+        return df.withColumn(out_col, F.lit(False))
     return df.withColumn(
         out_col,
-        F.when(dig.isNull(), F.lit(False)).otherwise(
-            _probe(F.coalesce(dig, F.lit(0)))
-        ),
+        F.coalesce(_broadcast_probe(key_col, hash_strategy, b), F.lit(False)),
     )
 
 
@@ -714,6 +728,20 @@ def contains_join(
     join_back: str = "auto",
 ) -> DataFrame:
     """Shard-aligned cogroup probe for banks too large to broadcast.
+
+    Routing: with both ``payload`` and ``join_back`` left at ``'auto'``, a
+    bank whose optimized-plan size estimate lies between 0 and the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` (the test Spark's
+    join planner uses to broadcast a join side; ``-1`` disables it) is
+    probed as ``contains`` probes it: no probe-side shuffle and no
+    cogroup, with the same answers and, like the cogroup plans, a
+    non-null ``out_col``.  The size test itself starts no Spark job.  The
+    first routed call on a bank DataFrame collects the bank to the driver
+    (one job, in place of the cogroup path's ``first()``) and broadcasts
+    it; later calls on the same bank object reuse that broadcast and
+    start no job.  An explicit ``payload`` (``'rows'``/``'digest'``) or
+    ``join_back`` (``'broadcast'``/``'shuffle'``) always keeps the cogroup
+    plan described below.
 
     Probes and bank rows co-partition on the shard id, so a 10^12-key bank
     never has to fit on one machine.  Two plan shapes, chosen by
@@ -758,6 +786,8 @@ def contains_join(
         raise ValueError("payload must be 'auto', 'rows' or 'digest'")
     if join_back not in ("auto", "broadcast", "shuffle"):
         raise ValueError("join_back must be 'auto', 'broadcast' or 'shuffle'")
+    if payload == "auto" and join_back == "auto" and _fits_broadcast(bank):
+        return _contains_routed(df, key_col, bank, out_col)
     if payload == "auto":
         key_names = {
             c for c in (key_col if isinstance(key_col, (list, tuple)) else [key_col])
@@ -788,10 +818,8 @@ def contains_join(
         d = np.unique(probe_pdf[DIGEST].to_numpy(dtype=np.int64))
         if bank_pdf.empty:
             return pd.DataFrame({DIGEST: d[:0]})
-        entry = _bank_to_dict(bank_pdf.to_dict("records"))[
-            int(bank_pdf["shard"].iloc[0])
-        ]
-        res = _lookup_shard(entry, d.astype(np.uint64))
+        shard = int(bank_pdf["shard"].iloc[0])
+        res = _lookup_flat(_bank_to_flat(bank_pdf.to_dict("records")), d, shard)
         return pd.DataFrame({DIGEST: d[res]})
 
     hits = (
@@ -809,6 +837,18 @@ def contains_join(
         .withColumn(out_col, F.coalesce(F.col(hit_col), F.lit(False)))
         .drop(DIGEST, hit_col)
     )
+
+
+def _fits_broadcast(bank: DataFrame) -> bool:
+    """Spark's broadcast-side size test (``canBroadcastBySize``): the
+    bank's optimized-plan estimate against the session's typed
+    ``autoBroadcastJoinThreshold``.  Plans the bank but runs no job."""
+    jspark = bank.sparkSession._jsparkSession
+    threshold = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+    if threshold < 0:
+        return False
+    size = bank._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 0 <= int(size) <= threshold
 
 
 def _field_width(f: T.StructField) -> int:
@@ -848,11 +888,9 @@ def _contains_join_rows(
         if bank_pdf.empty:
             out[out_col] = False
             return out
-        entry = _bank_to_dict(bank_pdf.to_dict("records"))[
-            int(bank_pdf["shard"].iloc[0])
-        ]
-        d = probe_pdf[DIGEST].to_numpy(dtype=np.int64, na_value=0).astype(np.uint64)
-        res = _lookup_shard(entry, d)
+        d = probe_pdf[DIGEST].to_numpy(dtype=np.int64, na_value=0)
+        shard = int(bank_pdf["shard"].iloc[0])
+        res = _lookup_flat(_bank_to_flat(bank_pdf.to_dict("records")), d, shard)
         res[probe_pdf[DIGEST].isna().to_numpy()] = False
         out[out_col] = res
         return out
