@@ -151,6 +151,7 @@ def test_contains_join_routes_small_bank_to_broadcast(spark, lineitem):
     want = xb.contains(probes, "l_partkey", b, "hit").orderBy("l_partkey").collect()
     schema = xb.contains_join(probes, "l_partkey", b, "hit", payload="rows").schema
     assert not schema["hit"].nullable
+    assert xb.contains(probes, "l_partkey", b, "hit").schema == schema
 
     def probe(**kw):
         out = xb.contains_join(probes, "l_partkey", b, "hit", **kw)
@@ -170,6 +171,41 @@ def test_contains_join_routes_small_bank_to_broadcast(spark, lineitem):
     assert "FlatMapCoGroupsInPandas" in probe(join_back="broadcast")
     with _broadcast_threshold(spark, "-1"):
         assert "FlatMapCoGroupsInPandas" in probe()
+
+
+def test_probes_reuse_one_bank_state(spark, lineitem):
+    """After a first ``contains``, every probe of the same bank object --
+    ``contains``, the approximate semi/anti joins and a routed
+    ``contains_join`` -- starts no Spark job while its DataFrame is built,
+    adds no driver temp file, and answers as the first call did."""
+    sc = spark.sparkContext
+    b = xb.build_bank(lineitem, "l_partkey", variant="xor8", num_shards=4)
+    keys = lineitem.select("l_partkey").distinct().union(
+        spark.range(10**9, 10**9 + 5_000).toDF("l_partkey")
+    )
+    first = xb.contains(keys, "l_partkey", b, "hit")
+    want = first.orderBy("l_partkey").collect()
+    hits = [r["l_partkey"] for r in want if r["hit"]]
+    misses = [r["l_partkey"] for r in want if not r["hit"]]
+    n_files = len(os.listdir(sc._temp_dir))
+
+    group = "probe-state-reuse"
+    sc.setJobGroup(group, "probes built on a bank already probed once")
+    try:
+        again = [xb.contains(keys, "l_partkey", b, "hit") for _ in range(3)]
+        semi = xb.approx_semi_join(keys, "l_partkey", b)
+        anti = xb.approx_anti_join(keys, "l_partkey", b)
+        joined = xb.contains_join(keys, "l_partkey", b, "hit")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "FlatMapCoGroupsInPandas" not in _plan(joined)
+    for out in again + [joined]:
+        assert out.schema == first.schema
+        assert out.orderBy("l_partkey").collect() == want
+    assert [r[0] for r in semi.orderBy("l_partkey").collect()] == hits
+    assert [r[0] for r in anti.orderBy("l_partkey").collect()] == misses
+    assert len(os.listdir(sc._temp_dir)) == n_files
 
 
 @pytest.mark.parametrize("payload", ["rows", "digest"])

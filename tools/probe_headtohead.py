@@ -13,7 +13,7 @@ narrow (bare 8-byte key) and a wide (~450 B/row) probe table:
 Shapes are interleaved A/B/A/B within one JVM so hypervisor-steal drift
 hits all of them equally; per-shape best-of-REPS is reported with the
 host-health score before/after.  Writes BENCH/probe_headtohead_r4.json
-and prints it.
+in the checkout this script lives in, and prints it.
 
 Usage: python tools/probe_headtohead.py [n_keys] [reps]
 """
@@ -25,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_KEYS = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
 REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -54,7 +55,7 @@ def main() -> None:
         .appName("probe-headtohead")
         .config("spark.sql.shuffle.partitions", str(max(CPUS * 2, 16)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000000")
         .getOrCreate()
@@ -121,7 +122,7 @@ def main() -> None:
         "best": {k: min(v) for k, v in results.items()},
         "samples": results,
     }
-    with open("/root/repo/BENCH/probe_headtohead_r4.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "probe_headtohead_r4.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
 
