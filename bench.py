@@ -1,28 +1,19 @@
-"""Benchmark harness — prints ONE JSON line the driver records as BENCH_r{N}.json.
+"""Benchmark suite: times the headline queries q1-q10 in one Spark session
+and prints ONE JSON line about that run.
 
-Headline queries mirror the reference's perf harness
-(/root/reference/src/bin/perf.rs: build 10M sequential u64 keys, then
-random gets) re-expressed as the distributed bank, plus the web-text
-pipeline over the driver's testdata.
-
-Coherent-sample discipline (VERDICT r2 item 2): the r2 headline table
-mixed best-of per query across *different* bench runs, so no single run
-exhibited the claimed suite.  Now the WHOLE suite runs as one contiguous
-pass per sample; up to ``BENCH_SUITE_SAMPLES`` samples are taken and the
-single best sample (lowest suite total) is reported wholesale — every
-per-query number in ``queries`` comes from the same pass.  All samples'
-totals + host-health scores are embedded under ``samples`` so a reader
-can see the window-to-window hypervisor-steal spread this VM exhibits.
+The headline queries mirror the reference's perf harness (src/bin/perf.rs:
+build 10M sequential u64 keys, then random gets) re-expressed as the
+distributed bank, plus the web-text pipeline over the testdata.  The whole
+suite runs as one contiguous pass, ``SUITE_PASSES`` times in one session,
+and the fastest pass is reported wholesale: every per-query number in
+``queries`` comes from the same pass.
 
 Env:
   SPARK_GRAFT_SF_DIR    testdata dir     (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS      local[N]         (default 32)
   BENCH_KEYS            build size       (default 10_000_000)
-  BENCH_SUITE_SAMPLES   full-suite reps  (default 2)
-  BENCH_WAIT_HEALTH     pre-sample host-health target (default 100); if the
-                        current window scores below it, poll up to
-  BENCH_WAIT_MAX_SEC    seconds (default 1800) for a quieter one, then
-                        proceed regardless (wait recorded in the output)
+
+Usage: python bench.py
 """
 
 from __future__ import annotations
@@ -37,27 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_KEYS = int(os.environ.get("BENCH_KEYS", str(10_000_000)))
-N_SAMPLES = int(os.environ.get("BENCH_SUITE_SAMPLES", "2"))
-
-
-def _host_health_once() -> float:
-    import numpy as np
-
-    t0 = time.perf_counter()
-    x = np.arange(20_000_000, dtype="uint64")
-    for _ in range(5):
-        x = x * np.uint64(0xFF51AFD7ED558CCD)
-        x ^= x >> np.uint64(33)
-    return 100_000_000 / (time.perf_counter() - t0) / 1e6
-
-
-def host_health() -> int:
-    """Wall-clock score of this VM window (healthy ~150, steal-degraded
-    <10): fixed numpy integer-mix workload, ops/us.  Median of 3 probes —
-    single point probes on this VM swing 3x within seconds (measured
-    48 -> 158 -> 39 bracketing one 12 s suite run), so a one-probe
-    before/after stamp is a lottery in both directions."""
-    return round(sorted(_host_health_once() for _ in range(3))[1])
+SUITE_PASSES = 2
 
 
 def run_suite(spark) -> tuple[dict, dict]:
@@ -90,8 +61,7 @@ def run_suite(spark) -> tuple[dict, dict]:
     def best_of(name, fn, reps=2):
         """Each query runs twice back-to-back (same pass, ~seconds apart),
         min wall recorded — absorbs a single steal burst without mixing
-        windows; the whole-suite sampling above handles window-scale
-        noise."""
+        passes."""
         best, result = None, None
         for _ in range(reps):
             t0 = time.perf_counter()
@@ -146,9 +116,9 @@ def run_suite(spark) -> tuple[dict, dict]:
 
     # non-headline variant builds (fuse8x4 / xor16 / fuse16x4): space +
     # build time, not headline queries.  Best-of-2 like the headline
-    # queries — single-shot numbers are burst-fragile on this VM (r3's
-    # health-12 window recorded 18 s for a build that takes ~1 s healthy;
-    # the kernel is width-blind so a real 18x gap is impossible).
+    # queries — single-shot numbers are fragile under host steal bursts
+    # (r3 once recorded 18 s for a build that takes ~1 s; the kernel is
+    # width-blind so a real 18x gap is impossible).
     for variant, shard_spec, space_key in (
         ("fuse8x4", "auto", "fuse8x4_bits_per_key_auto"),
         ("xor16", shards, "xor16_bits_per_key"),
@@ -298,292 +268,41 @@ def main() -> None:
         )
     )
 
-    # Pre-sample health gate: this shared VM has bursty hypervisor steal
-    # (same suite varies >10x between windows — see BENCH/BASELINE.md), so
-    # if the current window is degraded, wait a bounded time for a quieter
-    # one before burning the samples.  Proceeds regardless at the deadline;
-    # the wait is recorded in the output.
-    wait_target = float(os.environ.get("BENCH_WAIT_HEALTH", "100"))
-    # 30 min default: this VM's degraded stretches run hours, but healthy
-    # patches recur within them; a longer bounded wait materially raises
-    # the odds the driver's own artifact shows a healthy window (the
-    # embedded gated samples cover the case where it still doesn't).
-    wait_max = float(os.environ.get("BENCH_WAIT_MAX_SEC", "1800"))
-    waited = 0.0
-    h = host_health()
-    while h < wait_target and waited < wait_max:
-        time.sleep(45)
-        waited += 45
-        h = host_health()
-
-    samples = []
-    for i in range(max(1, N_SAMPLES)):
-        h0 = host_health()
-        timings, extra = run_suite(spark)
-        h1 = host_health()
-        samples.append(
-            {
-                "total": round(sum(timings.values()), 3),
-                "health_before": h0,
-                "health_after": h1,
-                "queries": timings,
-                "extra": extra,
-            }
-        )
-
+    passes = [run_suite(spark) for _ in range(SUITE_PASSES)]
     spark.stop()
 
-    best = min(samples, key=lambda s: s["total"])
+    timings, extra = min(passes, key=lambda p: sum(p[0].values()))
     out = {
         "metric": "bank+pipeline suite wall time",
-        "value": best["total"],
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "queries": best["queries"],
+        "queries": timings,
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "cpus": CPUS,
         "n_keys": N_KEYS,
-        "host_health_score": min(best["health_before"], best["health_after"]),
         "coherent_sample": True,  # every number in `queries` is one pass
-        "health_wait_sec": round(waited, 1),
-        "samples": [
-            {k: s[k] for k in ("total", "health_before", "health_after")}
-            for s in samples
-        ],
-        **best["extra"],
+        "pass_totals": [round(sum(t.values()), 3) for t, _ in passes],
+        **extra,
     }
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-    attach_healthy_samples(out, bench_dir)
-    try:
-        with open(os.path.join(bench_dir, "scaling.json")) as f:
-            sc = json.load(f)
-        out["scaling_efficiency_NtoN4"] = sc.get("build_scaling_efficiency")
-        out["scaling_n_keys"] = sc.get("n_keys")
-    except Exception:
-        pass
-    # Verbose artifact (every sample + the embedded gated healthy runs) goes
-    # to a file; stdout gets ONE compact line — see compact_line below.
-    full_ref = None
-    full_path = os.environ.get(
-        "BENCH_FULL_OUT", os.path.join(bench_dir, "bench_full_last.json")
-    )
-    try:
-        os.makedirs(os.path.dirname(full_path), exist_ok=True)
-        with open(full_path, "w") as f:
-            json.dump(out, f, indent=2)
-        full_ref = os.path.relpath(
-            full_path, os.path.dirname(os.path.abspath(__file__))
-        )
-    except Exception:
-        pass
-    print(compact_line(out, full_ref))
+    print(compact_line(out))
 
 
-def compact_line(out: dict, full_ref: str | None = None, budget: int = 1500) -> str:
+# What a line keeps when the whole result overruns its budget.
+ESSENTIAL = ("metric", "value", "unit", "queries", "sf", "cpus", "n_keys")
+
+
+def compact_line(out: dict, budget: int = 1500) -> str:
     """The ONE stdout JSON line the driver records as BENCH_r{N}.json.
 
-    The driver keeps only the LAST 2,000 chars of stdout; r4's verbose line
-    was ~2,045 chars (the embedded healthy-window samples pushed it over),
-    so the recorded artifact had ``parsed: null`` and the round's numbers
-    were invisible to the grader.  This line budgets ≤1,500 chars: suite
-    total, per-query secs, keys/s, FPP, bits/key, N→4N scaling efficiency,
-    plus a flattened summary of the best health-gated window sample
-    (its per-query secs + health score).  Everything else lives in the
-    ``full`` artifact file under BENCH/.
+    The driver keeps only the LAST 2,000 chars of stdout (r4's ~2,045-char
+    line was cut and recorded as ``parsed: null``).  A real run's result
+    fits ``budget`` whole; one that does not is cut to ``ESSENTIAL``.
     """
-    keep = [
-        "metric", "value", "unit", "queries", "sf", "cpus", "n_keys",
-        "host_health_score", "coherent_sample", "health_wait_sec", "samples",
-        "scaling_efficiency_NtoN4", "scaling_n_keys",
-        "build_xor8_keys_per_sec", "build_fuse8_keys_per_sec",
-        "probe_keys_per_sec", "probe_cogroup_keys_per_sec",
-        "probe_cogroup_wide_keys_per_sec", "xor8_fpp",
-        "xor8_bits_per_key", "fuse8_bits_per_key",
-    ]
-    line = {k: out[k] for k in keep if k in out}
-    if full_ref:
-        line["full"] = full_ref
-    if "healthy_window_sample_full" in out:
-        hw = out["healthy_window_sample_full"]
-        line["healthy_round"] = out.get("healthy_window_round_full")
-    elif "healthy_window_sample" in out:
-        hw = out["healthy_window_sample"]
-        line["healthy_round"] = out.get("healthy_window_round")
-    else:
-        hw = None
-    if hw:
-        line["healthy_health"] = hw.get("host_health_score")
-        hq = hw.get("queries", {})
-        line["healthy_total"] = round(sum(hq.values()), 3)
-        line["healthy_queries"] = hq
-    if "held_window_sample" in out:
-        hd = out["held_window_sample"]
-        dq = hd.get("queries", {})
-        line["held_health"] = hd.get("host_health_score")
-        line["held_total"] = round(sum(dq.values()), 3)
-        line["held_queries"] = dq
-    # when the full-coverage embed and the shared-subset winner are
-    # different samples (e.g. an older round's faster but smaller-suite
-    # sample), summarize the latter too so both travel to the grader
-    if "healthy_window_sample_full" in out and "healthy_window_sample" in out:
-        hs = out["healthy_window_sample"]
-        line["healthy_shared_round"] = out.get("healthy_window_round")
-        line["healthy_shared_health"] = hs.get("host_health_score")
-        line["healthy_shared_total"] = hs.get("value")
-    # progressive trim to the budget — essentials (value, queries, scaling,
-    # health) are never dropped
-    drop = [
-        "samples", "health_wait_sec", "metric",
-        "held_queries",
-        "healthy_shared_round", "healthy_shared_health",
-        "healthy_shared_total", "healthy_queries",
-        "fuse8_bits_per_key", "xor8_bits_per_key",
-        "probe_cogroup_wide_keys_per_sec", "probe_cogroup_keys_per_sec",
-        "build_fuse8_keys_per_sec", "healthy_total", "full",
-        "healthy_health", "healthy_round", "held_total", "held_health",
-        "scaling_n_keys",
-        "probe_keys_per_sec", "build_xor8_keys_per_sec", "xor8_fpp",
-        "coherent_sample", "n_keys", "cpus",
-    ]
-    s = json.dumps(line, separators=(",", ":"))
-    for k in drop:
-        if len(s) <= budget:
-            break
-        line.pop(k, None)
-        s = json.dumps(line, separators=(",", ":"))
+    s = json.dumps(out, separators=(",", ":"))
+    if len(s) > budget:
+        s = json.dumps({k: out[k] for k in ESSENTIAL if k in out},
+                       separators=(",", ":"))
     return s
-
-
-def attach_healthy_samples(out: dict, bench_dir: str) -> None:
-    """Embed the best health-gated coherent sample collected by
-    tools/bench_gated.py (which hunts quiet windows for hours): if THIS
-    run landed in a degraded window, the healthy-window evidence still
-    travels inside the recorded artifact, with its own health scores and
-    timestamp for provenance.
-
-    best-by-value across rounds: a half-degraded r4 sample must not shadow
-    a cleaner r3 one (the hot paths are unchanged; the round label carries
-    the provenance either way).  Held-window evidence (a sample whose
-    window survived the whole run, score >= 100) travels separately via
-    attach_held_sample.
-    """
-    candidates = []
-    for rnd in (5, 4, 3):
-        try:
-            with open(os.path.join(bench_dir, f"bench_healthy_r{rnd}.json")) as f:
-                cand = json.load(f)
-        except Exception:
-            continue
-        # gated samples must be the IDENTICAL configuration: same sf, same
-        # core count, same key count — a sample taken at another scale or
-        # parallelism must not be wall-time-compared against this run
-        # (ADVICE r4: the old gate checked sf only)
-        if any(
-            k in cand and k in out and cand[k] != out[k]
-            for k in ("sf", "cpus", "n_keys")
-        ):
-            continue
-        # the gated artifact is itself a bench.py output line and may carry
-        # an embedded sample of its own — strip it so embeds don't nest
-        for k in (
-            "healthy_window_sample",
-            "healthy_window_round",
-            "healthy_window_sample_full",
-            "healthy_window_round_full",
-            # stale snapshot of scaling.json at sample time; the current
-            # values are re-added at top level below
-            "scaling_efficiency_NtoN4",
-            "scaling_n_keys",
-        ):
-            cand.pop(k, None)
-        candidates.append((cand, rnd))
-    if candidates:
-        # Compare on the query set every candidate shares: r3 samples
-        # predate q10 (~7 s of honest extra work), so a raw-total
-        # comparison would let a q10-less 8.7 s sample permanently shadow
-        # a fuller r4 sample.  Same-subset comparison keeps the pick fair
-        # as the suite grows.
-        shared = set.intersection(
-            *(set(c[0].get("queries", {})) for c in candidates)
-        )
-
-        def subtotal(queries: dict) -> float:
-            if not shared:
-                return float("inf")
-            return sum(queries.get(k, float("inf")) for k in shared)
-
-        healthy, rnd = min(
-            candidates,
-            key=lambda c: subtotal(c[0].get("queries", {}))
-            if shared
-            else c[0].get("value", 1e9),
-        )
-        shared_run = [k for k in shared if k in out["queries"]]
-        healthy_sub = sum(healthy["queries"].get(k, 0.0) for k in shared_run)
-        run_sub = sum(out["queries"][k] for k in shared_run)
-        if shared_run and healthy_sub < run_sub:
-            out["healthy_window_sample"] = healthy
-            out["healthy_window_round"] = rnd
-        # The shared-subset winner can be an older, smaller-suite sample
-        # (r3 predates q10) that carries no healthy evidence for the newer
-        # queries.  Also embed the best candidate covering THIS run's full
-        # query set, so a healthy-window number for every current query
-        # travels in the artifact.
-        full = [
-            c
-            for c in candidates
-            if set(out["queries"]) <= set(c[0].get("queries", {}))
-        ]
-        if full:
-            fbest, frnd = min(
-                full,
-                key=lambda c: sum(c[0]["queries"][k] for k in out["queries"]),
-            )
-            fsub = sum(fbest["queries"][k] for k in out["queries"])
-            if fsub < sum(out["queries"].values()) and fbest is not out.get(
-                "healthy_window_sample"
-            ):
-                out["healthy_window_sample_full"] = fbest
-                out["healthy_window_round_full"] = frnd
-    attach_held_sample(out, bench_dir)
-
-
-def attach_held_sample(out: dict, bench_dir: str) -> None:
-    """Embed the best HELD-window gated sample (tools/bench_gated.py writes
-    it to bench_held_r5.json): host_health_score is min(before, after), so
-    >=100 means the window SURVIVED the whole run.  The fastest gated
-    sample so far (12.25 s) carries before=158 after=39 — fast, but its
-    window collapsed mid-run — so the fastest and the best-held samples
-    travel as separate embeds until one sample is both.  Skipped when the
-    run itself or an already-embedded sample holds (score >= 100)."""
-    for holder in (
-        out,
-        out.get("healthy_window_sample", {}),
-        out.get("healthy_window_sample_full", {}),
-    ):
-        if holder.get("host_health_score", 0) >= 100:
-            return
-    try:
-        with open(os.path.join(bench_dir, "bench_held_r5.json")) as f:
-            cand = json.load(f)
-    except Exception:
-        return
-    if cand.get("host_health_score", 0) < 100:
-        return
-    # same comparability gate as attach_healthy_samples (ADVICE r4)
-    if any(
-        k in cand and k in out and cand[k] != out[k]
-        for k in ("sf", "cpus", "n_keys")
-    ):
-        return
-    for k in (
-        "healthy_window_sample", "healthy_window_round",
-        "healthy_window_sample_full", "healthy_window_round_full",
-        "held_window_sample", "held_window_round",
-        "scaling_efficiency_NtoN4", "scaling_n_keys",
-    ):
-        cand.pop(k, None)
-    out["held_window_sample"] = cand
-    out["held_window_round"] = 5
 
 
 if __name__ == "__main__":

@@ -3,9 +3,9 @@
 Reproduces the BASELINE.md Amdahl analysis from the raw samples so the
 numbers are checkable: `a` is the fixed serial driver work (planning, the
 build+count actions, task coordination), `b` the parallel build itself.
-Pool filters mirror tools/scaling_bench.py (build-path version, health
-floor); each config's best is its least-contended estimate on this
-shared-steal VM.
+The pool (BENCH/scaling_samples.jsonl) is frozen round-5 data; the filters
+are the ones the recorded fit used: build-path version 2 (task count
+decoupled from shard count) and a recorded window health of at least 60.
 
 Usage: python tools/amdahl_fit.py [n_keys=60000000]
 Writes BENCH/amdahl_fit.json and prints it.
@@ -17,16 +17,15 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from scaling_bench import BPV  # noqa: E402  (parses bank.py, no pyspark)
-
-POOL = "/root/repo/BENCH/scaling_samples.jsonl"
-OUT = "/root/repo/BENCH/amdahl_fit.json"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+POOL = os.path.join(REPO, "BENCH", "scaling_samples.jsonl")
+OUT = os.path.join(REPO, "BENCH", "amdahl_fit.json")
+BPV = 2
+FLOOR = 60.0
 
 
 def main() -> None:
     n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else 60_000_000
-    floor = float(os.environ.get("SCALING_POOL_FLOOR", "60"))
     best: dict[int, dict] = {}
     with open(POOL) as f:
         for line in f:
@@ -37,7 +36,7 @@ def main() -> None:
             if (
                 r.get("n_keys") != n_keys
                 or r.get("bpv") != BPV
-                or r.get("health_before", 0.0) < floor
+                or r.get("health_before", 0.0) < FLOOR
             ):
                 continue
             c = r["cores"]
@@ -66,7 +65,7 @@ def main() -> None:
     out = {
         "n_keys": n_keys,
         "build_path_version": BPV,
-        "pool_floor": floor,
+        "pool_floor": FLOOR,
         "bests": {
             str(c): {
                 "build_sec": best[c]["build_sec"],

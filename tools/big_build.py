@@ -1,6 +1,6 @@
-"""One gated ≥10^8-key xor8 bank build — the Spark analog of the
-reference's ignored 1-billion-key tests
-(/root/reference/src/xor8/xor8_test.rs:205-215, src/fuse8_test.rs:249-263).
+"""One ≥10^8-key xor8 bank build — the Spark analog of the reference's
+ignored 1-billion-key tests (src/xor8/xor8_test.rs:205-215,
+src/fuse8_test.rs:249-263).
 
 Validates at real shard counts (auto sharding targets ~64k keys/shard →
 ~2k shards at 10^8 keys) what the small-SF suite validates at toy scale:
@@ -10,14 +10,11 @@ Validates at real shard counts (auto sharding targets ~64k keys/shard →
   * geometry-exact space (bank bytes == capacity-rule bytes, P12)
   * build + probe throughput (keys/s) at the full key count
 
-Health-gated like the other evidence tools (this shared VM has bursty
-hypervisor steal — tools/host_health.py): waits up to BIG_DEADLINE_SEC
-for a window scoring ≥ BIG_HEALTH_MIN, then runs once and writes
-BENCH/big_build_<keys>.json.
+Runs once and writes BENCH/big_build_<keys>.json in the checkout this
+script lives in.
 
 Usage: python tools/big_build.py [n_keys]        (default 100_000_000)
-Env:   BIG_HEALTH_MIN (default 80), BIG_DEADLINE_SEC (default 7200),
-       BIG_PAUSE_SEC (default 120), SPARK_GRAFT_CPUS (default 32)
+Env:   SPARK_GRAFT_CPUS (default: this host's core count)
 """
 
 from __future__ import annotations
@@ -27,41 +24,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_KEYS = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-HEALTH_MIN = float(os.environ.get("BIG_HEALTH_MIN", "80"))
-DEADLINE = float(os.environ.get("BIG_DEADLINE_SEC", "7200"))
-PAUSE = float(os.environ.get("BIG_PAUSE_SEC", "120"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 N_PROBES = 2_000_000
 
 
-def _host_health_once() -> float:
-    import numpy as np
-
-    t0 = time.perf_counter()
-    x = np.arange(20_000_000, dtype="uint64")
-    for _ in range(5):
-        x = x * np.uint64(0xFF51AFD7ED558CCD)
-        x ^= x >> np.uint64(33)
-    return 100_000_000 / (time.perf_counter() - t0) / 1e6
-
-
-def host_health() -> float:
-    # median of 3: single point probes swing 3x within seconds on this VM
-    return sorted(_host_health_once() for _ in range(3))[1]
-
-
 def main() -> None:
-    t_start = time.time()
-    h = host_health()
-    while h < HEALTH_MIN and time.time() - t_start < DEADLINE:
-        print(f"health {h:.0f} < {HEALTH_MIN:.0f}; waiting "
-              f"({(time.time() - t_start) / 60:.0f} min elapsed)", flush=True)
-        time.sleep(PAUSE)
-        h = host_health()
-
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -88,7 +59,6 @@ def main() -> None:
     B.bank_len(B.build_bank(keys.limit(200_000), "key", variant="xor8",
                             num_shards=64, dedup="kernel"))
 
-    h_before = host_health()
     t0 = time.perf_counter()
     bank = B.build_bank(
         keys, "key", variant="xor8", num_shards="auto", dedup="kernel"
@@ -123,7 +93,6 @@ def main() -> None:
         .agg(F.avg(F.col("hit").cast("double")).alias("fpp"))
         .collect()[0]
     )
-    h_after = host_health()
     spark.stop()
 
     fpp = float(frow["fpp"])
@@ -148,11 +117,7 @@ def main() -> None:
         "size_bytes": size_bytes,
         "expected_size_bytes": expected_bytes,
         "space_geometry_exact": size_bytes == expected_bytes,
-        "health_before": round(h_before, 1),
-        "health_after": round(h_after, 1),
-        "health_wait_min": round((time.time() - t_start) / 60, 1),
         "measured_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "build_path_version": B.BUILD_PATH_VERSION,
         "reference": "xor8_test.rs:205-215 (ignored 1B-key test); "
                      "FPP bound xor8_test.rs:78-87",
     }
@@ -161,7 +126,7 @@ def main() -> None:
     assert fpp <= 0.004, fpp
     assert out["space_geometry_exact"], (size_bytes, expected_bytes)
 
-    path = f"/root/repo/BENCH/big_build_{N_KEYS // 1_000_000}m.json"
+    path = os.path.join(REPO, "BENCH", f"big_build_{N_KEYS // 1_000_000}m.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out, indent=2))

@@ -11,11 +11,12 @@ narrow (bare 8-byte key) and a wide (~450 B/row) probe table:
                     >10^8-distinct-key escape hatch
 
 Shapes are interleaved A/B/A/B within one JVM so hypervisor-steal drift
-hits all of them equally; per-shape best-of-REPS is reported with the
-host-health score before/after.  Writes BENCH/probe_headtohead_r4.json
-in the checkout this script lives in, and prints it.
+hits all of them equally; per-shape best-of-REPS is reported.  Writes
+BENCH/probe_headtohead_r4.json in the checkout this script lives in, and
+prints it.
 
 Usage: python tools/probe_headtohead.py [n_keys] [reps]
+Env:   SPARK_GRAFT_CPUS (default: this host's core count)
 """
 
 from __future__ import annotations
@@ -30,18 +31,7 @@ sys.path.insert(0, REPO)
 
 N_KEYS = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
 REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def host_health() -> float:
-    import numpy as np
-
-    t0 = time.perf_counter()
-    x = np.arange(20_000_000, dtype="uint64")
-    for _ in range(5):
-        x = x * np.uint64(0xFF51AFD7ED558CCD)
-        x ^= x >> np.uint64(33)
-    return round(100_000_000 / (time.perf_counter() - t0) / 1e6, 1)
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def main() -> None:
@@ -100,7 +90,6 @@ def main() -> None:
         ),
     }
 
-    h0 = host_health()
     results: dict[str, list[float]] = {k: [] for k in shapes}
     for _ in range(REPS):  # interleave: every rep touches every shape
         for name, fn in shapes.items():
@@ -110,15 +99,12 @@ def main() -> None:
                 F.count("*").alias("n"),
             ).collect()
             results[name].append(round(time.perf_counter() - t0, 3))
-    h1 = host_health()
     spark.stop()
 
     out = {
         "n_keys": N_KEYS,
         "cpus": CPUS,
         "reps": REPS,
-        "health_before": h0,
-        "health_after": h1,
         "best": {k: min(v) for k, v in results.items()},
         "samples": results,
     }

@@ -1,9 +1,9 @@
 """Two-cluster-size scaling evidence (north rule).
 
-A real N-vs-4N-executor cluster does not exist in this sandbox, so per the
-task brief we evidence the scaling criterion by running the IDENTICAL bank
-build at two parallelism levels on the same input — local[N] and local[4N]
-— in separate fresh JVMs, and reporting throughput at both plus
+A real N-vs-4N-executor cluster does not exist in this sandbox, so we
+evidence the scaling criterion by running the IDENTICAL bank build at two
+parallelism levels on the same input — local[N] and local[4N] — in
+separate fresh JVMs, and reporting throughput at both plus
 efficiency = T_4N / (4 * T_N).
 
 Each run is launched exactly as the north rule words it: ``spark-submit
@@ -12,30 +12,12 @@ Each run is launched exactly as the north rule words it: ``spark-submit
 (the worker never puts the repo dir on sys.path), proving the package is
 self-contained the way a real cluster submission requires.
 
-The host is a shared VM with bursty steal time (same job varies >20x
-wall-clock between windows — see tools/host_health.py).  In a degraded
-window the bottleneck is the hypervisor, not CPU, so added cores cannot
-show scaling and the A/B ratio measures the neighbors, not this code.
-Therefore each A/B pair is HEALTH-GATED: a quick CPU probe must score
->= SCALING_HEALTH_MIN (default 60; healthy ~150) or the pair is skipped
-and retried after a pause, until REPS valid pairs are collected or
-SCALING_DEADLINE_SEC expires.  Each recorded sample carries the health
-score measured immediately before it.
+The N and 4N runs alternate, REPS pairs in all, and each config's fastest
+run of this invocation is reported.  The result goes to stdout (progress
+to stderr), so it never overwrites the recorded BENCH/scaling.json.
+Usage:
 
-Even above the gate the probe can't see neighbors' memory-bus load (an
-8-core build of the same job has been seen at 20.3s and 41.4s, both at
-health >100), so every gated sample is appended to a persistent pool
-(BENCH/scaling_samples.jsonl) and BENCH/scaling.json is recomputed as
-per-config BEST over the pool — each config's fastest gated run is the
-least-contended estimate of its true runtime, and the estimate only
-sharpens as invocations accumulate.  The full pool stays on disk for
-honesty; only samples of the IDENTICAL job (same n_keys, same shard
-layout, same cores, health >= SCALING_POOL_FLOOR) pool together.
-
-Writes BENCH/scaling.json (+ scaling_latest_attempt.json for this
-invocation's own best-of-k).  Usage:
-
-    python tools/scaling_bench.py [n_keys] [small_cores] [reps]
+    python tools/scaling_bench.py [n_keys] [small_cores] [reps] > out.json
 """
 
 from __future__ import annotations
@@ -44,32 +26,17 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from pyfiles import make_pyfiles_zip, spark_submit_path  # noqa: E402
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_KEYS = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
 SMALL = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 LARGE = SMALL * 4
-HEALTH_MIN = float(os.environ.get("SCALING_HEALTH_MIN", "60"))
-DEADLINE = float(os.environ.get("SCALING_DEADLINE_SEC", "14400"))
-PAUSE = float(os.environ.get("SCALING_PAUSE_SEC", "180"))
-
-
-def _host_health_once() -> float:
-    import numpy as np
-
-    t0 = time.perf_counter()
-    x = np.arange(20_000_000, dtype="uint64")
-    for _ in range(5):
-        x = x * 0xFF51AFD7ED558CCD
-        x ^= x >> 33
-    return 100_000_000 / (time.perf_counter() - t0) / 1e6
-
-
-def host_health() -> float:
-    # median of 3: single point probes swing 3x within seconds on this VM,
-    # so a one-probe gate admits fluke-high windows and skips real ones
-    return sorted(_host_health_once() for _ in range(3))[1]
 
 WORKER = r"""
 import json, sys, time
@@ -108,7 +75,6 @@ B.contains(probes, "key", bank, "hit").agg(F.sum(F.col("hit").cast("long"))).col
 pel = time.perf_counter() - t1
 spark.stop()
 print(json.dumps({"cores": cores, "n_keys": total, "shards": shards,
-                  "bpv": getattr(B, "BUILD_PATH_VERSION", 0),
                   "build_sec": round(el, 3),
                   "build_keys_per_sec": round(total / el, 1),
                   "probe_sec": round(pel, 3),
@@ -117,9 +83,6 @@ print(json.dumps({"cores": cores, "n_keys": total, "shards": shards,
 
 
 def _submit_cmd(cores: int, worker_py: str, zip_path: str) -> list[str]:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyfiles import spark_submit_path
-
     shards = 256
     return [
         spark_submit_path(),
@@ -135,192 +98,53 @@ def _submit_cmd(cores: int, worker_py: str, zip_path: str) -> list[str]:
 
 
 def run(cores: int) -> dict | None:
-    import tempfile
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyfiles import make_pyfiles_zip
-
-    tmp = tempfile.mkdtemp(prefix="scaling-submit-")
-    zip_path = make_pyfiles_zip(os.path.join(tmp, "xorfilter_spark.zip"))
-    worker_py = os.path.join(tmp, "scaling_worker.py")
-    with open(worker_py, "w") as f:
-        f.write(WORKER)
-    out = subprocess.run(
-        _submit_cmd(cores, worker_py, zip_path),
-        capture_output=True, text=True, timeout=3600,
-        cwd=tmp,  # not the repo: imports must come from the zip
-    )
+    with tempfile.TemporaryDirectory(prefix="scaling-submit-") as tmp:
+        zip_path = make_pyfiles_zip(os.path.join(tmp, "xorfilter_spark.zip"))
+        worker_py = os.path.join(tmp, "scaling_worker.py")
+        with open(worker_py, "w") as f:
+            f.write(WORKER)
+        out = subprocess.run(
+            _submit_cmd(cores, worker_py, zip_path),
+            capture_output=True, text=True, timeout=3600,
+            cwd=tmp,  # not the repo: imports must come from the zip
+        )
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if not lines:
         print(f"worker cores={cores} produced no result; stderr tail:\n"
-              f"{out.stderr[-1500:]}", flush=True)
+              f"{out.stderr[-1500:]}", file=sys.stderr, flush=True)
         return None
     return json.loads(lines[-1])
 
 
 def main() -> None:
     samples: dict[int, list[dict]] = {SMALL: [], LARGE: []}
-    t_start = time.time()
-    valid_pairs = 0
-    floor = float(os.environ.get("SCALING_HEALTH_FLOOR", "30"))
-    stage_sec = float(os.environ.get("SCALING_STAGE_SEC", "5400"))
-    while valid_pairs < REPS and time.time() - t_start < DEADLINE:
-        # staged gate: insist on a truly quiet window first; if none appears
-        # within stage_sec, accept a moderately-degraded one (annotated via
-        # health_before) rather than produce nothing
-        gate = HEALTH_MIN if time.time() - t_start < stage_sec else floor
-        h = host_health()
-        if h < gate:
-            print(f"health {h:.0f} < {gate:.0f}; waiting for a quiet "
-                  f"window ({(time.time() - t_start) / 60:.0f} min elapsed)",
-                  flush=True)
-            time.sleep(PAUSE)
-            continue
-        pair_ok = True
-        for cores in (SMALL, LARGE):  # A/B alternation inside one window
+    for pair in range(REPS):
+        for cores in (SMALL, LARGE):  # A/B alternation
             r = run(cores)
             if r is None:
-                pair_ok = False
                 continue
-            r["health_before"] = round(h, 1)
             samples[cores].append(r)
-            print(f"pair {valid_pairs} cores {cores} (health {h:.0f}): "
-                  f"build {r['build_sec']}s ({r['build_keys_per_sec']}/s) "
-                  f"probe {r['probe_sec']}s", flush=True)
-        if pair_ok:
-            valid_pairs += 1
-
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    # Append every sample to the persistent pool: single invocations are
-    # at the mercy of the window they happen to land in (even above the
-    # health gate, an 8-core build has been seen at both 20.3s and 41.4s
-    # — the single-threaded health probe can't see neighbors' memory-bus
-    # load).  Each config's best-over-the-pool is the least-contended
-    # estimate of its true runtime, and the pool only sharpens as more
-    # gated samples accumulate.  All samples stay on disk for honesty.
-    now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-    try:
-        rev = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"], capture_output=True,
-            text=True, cwd="/root/repo", timeout=10,
-        ).stdout.strip()
-    except Exception:
-        rev = ""
-    with open(POOL_PATH, "a") as f:
-        for cores in (SMALL, LARGE):
-            for r in samples[cores]:
-                f.write(json.dumps({**r, "measured_at": now, "rev": rev}) + "\n")
-
-    result = _result_from(samples, "best-of-k per config this invocation "
-                          "(shared-VM steal noise; all samples below)")
-    if result is not None:
-        with open("/root/repo/BENCH/scaling_latest_attempt.json", "w") as f:
-            json.dump(result, f, indent=2)
-
-    pool = _load_pool()
-    pooled = _result_from(pool, "best-of-pool per config across "
-                          "health-gated invocations of the identical job "
-                          "at the same build-path version (shared-VM steal "
-                          f"noise; full pool in {os.path.basename(POOL_PATH)})")
-    if pooled is not None:
-        # `reps` describes one invocation; the pooled result aggregates
-        # many, so report the pool's per-config sample counts instead
-        # (ADVICE r4, low)
-        pooled["reps"] = None
-        pooled["pool_samples"] = {
-            str(SMALL): len(pool[SMALL]), str(LARGE): len(pool[LARGE])
-        }
-        pooled["build_path_version"] = BPV
-    out_path = os.environ.get("SCALING_OUT", CANONICAL_OUT)
-    # only the canonical artifact carries the cross-invocation pooled
-    # result; a redirected SCALING_OUT records this invocation's own
-    # best-of-k (ADVICE r4, low: the old suffix match handed any
-    # */scaling.json the pool).  SCALING_POOLED=1 opts a redirected path
-    # back into the pooled result — the pool is already filtered to this
-    # exact job (n_keys/shards/cores/bpv/health), so a side artifact for
-    # a second job size (e.g. 240M next to the canonical 120M) can use
-    # the same best-of-pool selection without touching the canonical.
-    chosen = (
-        pooled
-        if (
-            os.path.realpath(out_path) == os.path.realpath(CANONICAL_OUT)
-            or os.environ.get("SCALING_POOLED") == "1"
-        )
-        else result
-    )
-    if chosen is None:
+            print(f"pair {pair} cores {cores}: build {r['build_sec']}s "
+                  f"({r['build_keys_per_sec']}/s) probe {r['probe_sec']}s",
+                  file=sys.stderr, flush=True)
+    if not samples[SMALL] or not samples[LARGE]:
         raise SystemExit("no successful samples for one config")
-    print(json.dumps(chosen, indent=2))
-    with open(out_path, "w") as f:
-        json.dump(chosen, f, indent=2)
 
-
-POOL_PATH = "/root/repo/BENCH/scaling_samples.jsonl"
-CANONICAL_OUT = "/root/repo/BENCH/scaling.json"
-
-
-def _worker_shards(n_keys: int) -> int:
-    # mirrors WORKER: fixed job across configs and invocations
-    return 1 << max(8, (n_keys // 64_000).bit_length())
-
-
-def _build_path_version() -> int:
-    """bank.BUILD_PATH_VERSION, parsed without importing pyspark."""
-    import re
-
-    with open("/root/repo/xorfilter_spark/bank.py") as f:
-        m = re.search(r"^BUILD_PATH_VERSION = (\d+)", f.read(), re.M)
-    return int(m.group(1)) if m else 0
-
-
-BPV = _build_path_version()
-
-
-def _load_pool() -> dict[int, list[dict]]:
-    """Pool samples comparable to this invocation's job: same n_keys,
-    same shard layout, same configs, same BUILD hot-path version, health
-    at/above the pool floor.  The bpv check (ADVICE r4, medium) keeps
-    best-of-pool from pairing a small-cores best of one code version with
-    a large-cores best of another — e.g. the r4 task-decoupling sped the
-    2-core build ~4x, so a pre-fix 2-core sample paired with a post-fix
-    8-core one would report an efficiency no single version exhibited.
-    Legacy samples without a bpv stamp predate the current build path and
-    are excluded by the same rule."""
-    floor = float(os.environ.get("SCALING_POOL_FLOOR", "60"))
-    shards = _worker_shards(N_KEYS)
-    pool: dict[int, list[dict]] = {SMALL: [], LARGE: []}
-    try:
-        with open(POOL_PATH) as f:
-            for line in f:
-                try:
-                    r = json.loads(line)
-                except Exception:
-                    continue
-                if (
-                    r.get("cores") in pool
-                    and r.get("n_keys") == N_KEYS
-                    and r.get("shards") == shards
-                    and r.get("bpv") == BPV
-                    and r.get("health_before", 0.0) >= floor
-                ):
-                    pool[r["cores"]].append(r)
-    except FileNotFoundError:
-        pass
-    return pool
-
-
-def _result_from(samples: dict[int, list[dict]], selection: str) -> dict | None:
-    if not samples.get(SMALL) or not samples.get(LARGE):
-        return None
     best_small = max(samples[SMALL], key=lambda r: r["build_keys_per_sec"])
     best_large = max(samples[LARGE], key=lambda r: r["build_keys_per_sec"])
     bp_small = max(samples[SMALL], key=lambda r: r["probe_keys_per_sec"])
     bp_large = max(samples[LARGE], key=lambda r: r["probe_keys_per_sec"])
     ratio = LARGE / SMALL
-    return {
+    rev = subprocess.run(
+        ["git", "rev-parse", "--short", "HEAD"], capture_output=True,
+        text=True, cwd=REPO, timeout=10,
+    ).stdout.strip()
+    print(json.dumps({
         "n_keys": N_KEYS,
         "reps": REPS,
-        "selection": selection,
+        "selection": "best-of-k per config this invocation",
+        "measured_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "rev": rev,
         "small_best": best_small,
         "large_best": best_large,
         "build_scaling_efficiency": round(
@@ -330,7 +154,7 @@ def _result_from(samples: dict[int, list[dict]], selection: str) -> dict | None:
             bp_large["probe_keys_per_sec"]
             / (ratio * bp_small["probe_keys_per_sec"]), 3),
         "samples": samples,
-    }
+    }, indent=2))
 
 
 if __name__ == "__main__":

@@ -60,16 +60,6 @@ from .kernels.xor8 import build_xor8
 DIGEST = "__digest"
 SHARD = "__shard"
 
-# Version of the build HOT PATH (digest → shard → repartition → peel
-# kernel).  Bump whenever a change alters build wall-time characteristics
-# (kernel rewrite, task sizing, shard targeting).  tools/scaling_bench.py
-# stamps it into every pooled sample and only pools samples taken at the
-# SAME version, so best-of-pool can never pair runs of different code and
-# report a scaling efficiency no single version exhibited (ADVICE r4).
-# History: 1 = per-shard tasks (≤r3); 2 = task count decoupled from shard
-# count + 64k-keys/shard L2 sizing (r4, commits 74c995c/bee5f6c).
-BUILD_PATH_VERSION = 2
-
 VARIANTS = ("xor8", "xor16", "fuse8", "fuse16", "fuse8x4", "fuse16x4")
 
 
