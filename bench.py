@@ -240,6 +240,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from tools.pyfiles import driver_heap
     from xorfilter_spark import bank as B
 
     spark = (
@@ -247,7 +248,7 @@ def main() -> None:
         .appName("xorfilter-spark-bench")
         .config("spark.sql.shuffle.partitions", str(max(CPUS * 2, 16)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_heap())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000000")

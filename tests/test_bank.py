@@ -258,7 +258,7 @@ def test_partition_layout_independence(spark, lineitem):
 
 def test_build_tasks_decoupled_from_shards(spark, lineitem):
     """num_shards >> task count: one task builds many shards sequentially
-    (the kernel splits its partition by shard id), so the bank content
+    (one packed digest row per shard), so the bank content
     must be identical across input layouts and the build must run in
     _build_tasks(...) partitions, not one per shard (at 60M keys / 1024
     L2-sized shards, per-shard tasks paid +56% wall at 2 cores)."""
@@ -276,6 +276,53 @@ def test_build_tasks_decoupled_from_shards(spark, lineitem):
     rows = snap(lineitem)
     assert rows == snap(lineitem.repartition(13))
     assert len({r[0] for r in rows}) > tasks  # many shards actually built
+
+
+FALLBACK = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+
+@pytest.mark.parametrize("tasks", [4, 1], ids=["hash_agg", "sort_fallback"])
+@pytest.mark.parametrize("variant", ["xor8", "fuse8"])
+def test_packed_build_matches_driver_side_shards(spark, variant, tasks):
+    """Each bank row equals the kernel run on the driver over the same
+    shard's digests, duplicates included.  256 shards over 4 tasks keeps
+    each task's packing aggregate in hash mode (64 groups); over 1 task it
+    holds 256 groups, past Spark's 128-group threshold, so the aggregate
+    falls back to sorting."""
+    from xorfilter_spark.kernels.fuse import build_fuse
+    from xorfilter_spark.kernels.xor8 import build_xor8
+
+    num_shards = 256
+    fallback = int(spark.conf.get(FALLBACK, "128"))
+    assert (num_shards // tasks > fallback) == (tasks == 1)
+    df = spark.range(40_000).select((F.col("id") % 30_000).alias("k"))
+    spark.conf.set("spark.xorfilter.build.tasks", str(tasks))
+    try:
+        bank = xb.build_bank(df, "k", variant=variant, num_shards=num_shards)
+        got = {r["shard"]: r for r in bank.collect()}
+        assert bank.rdd.getNumPartitions() == tasks
+    finally:
+        spark.conf.unset("spark.xorfilter.build.tasks")
+
+    d = np.array(
+        [r[0] for r in df.select(xb.digest_col("k")).collect()], dtype=np.int64
+    ).astype(np.uint64)
+    shard = (d >> np.uint64(56)).astype(np.int64)
+    assert sorted(got) == sorted(set(shard.tolist()))
+    for s, row in got.items():
+        mine = d[shard == s]
+        if variant == "xor8":
+            want = build_xor8(mine)
+            dups = mine.size - want["num_keys"]
+        else:
+            want = build_fuse(mine, fp_bits=8)
+            dups = want["duplicates"]
+        assert row["seed"] == xb._to_i64(want["seed"]), s
+        assert row["num_keys"] == want["num_keys"], s
+        assert row["num_rows"] == mine.size, s
+        assert row["duplicates"] == dups, s
+        assert bytes(row["fingerprints"]) == want["fingerprints"].tobytes(), s
+    assert sum(r["duplicates"] for r in got.values()) == 10_000
 
 
 def test_build_tasks_conf_override(spark):

@@ -1,7 +1,8 @@
 """Physical-plan shape assertions — the 100-TB properties the BENCH/PLANS.md
 audit claims, locked in as regression tests:
 
-- the bank build is ONE shuffle and its parquet scan reads only the key
+- the bank build is ONE shuffle, its peel reads one packed row per shard,
+  and its parquet scan reads only the key
 - the broadcast probe is a pure narrow map (zero shuffles)
 - the matmul ANN scorer shuffles only the per-batch top-k survivors
 - signature computation is shuffle-free once the input is spread
@@ -38,6 +39,12 @@ def lineitem(spark, sf_dir):
 def test_build_plan_one_shuffle_and_pruned_scan(spark, lineitem):
     plan = B.build_bank(lineitem, "l_orderkey", num_shards=8, dedup="kernel")
     assert _n_exchanges(plan) == 1, _plan(plan)
+    # the peel reads one packed row per shard: MapInPandas sits directly
+    # on the shard aggregate, which the shard shuffle already satisfies
+    lines = _plan(plan).splitlines()
+    i = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    assert "ObjectHashAggregate" in lines[i + 1], _plan(plan)
+    assert "collect_list(__digest" in lines[i + 1], _plan(plan)
     # column pruning: the scan must read ONLY the key column
     m = re.search(r"ReadSchema: struct<([^>]*)>", _plan(plan))
     assert m and m.group(1).split(":")[0] == "l_orderkey", _plan(plan)

@@ -91,8 +91,8 @@ def test_compact_line_trims_pathological_payload():
 
 @pytest.mark.parametrize("path", TOOLS, ids=os.path.basename)
 def test_tool_imports(path, monkeypatch):
-    # tools read their positional arguments and extend sys.path at import
-    monkeypatch.setattr(sys, "argv", [path])
+    # under pytest's own argv: a tool parses its arguments in main() only.
+    # Tools extend sys.path at import.
     monkeypatch.setattr(sys, "path", list(sys.path))
     spec = importlib.util.spec_from_file_location("_tool_under_test", path)
     spec.loader.exec_module(importlib.util.module_from_spec(spec))

@@ -27,7 +27,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-N_KEYS = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 N_PROBES = 2_000_000
 
@@ -36,14 +35,17 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from tools.pyfiles import driver_heap
     from xorfilter_spark import bank as B
+
+    n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("xorfilter-big-build")
         .config("spark.sql.shuffle.partitions", str(max(CPUS * 2, 16)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_heap())
         # the bank-rows collect at 10^9 keys is ~1.23 GB of fingerprints
         # (9.84 bits/key) — the deliberate, documented broadcast side;
         # the 1g default caps it mid-collect
@@ -54,7 +56,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    keys = spark.range(N_KEYS).select(F.col("id").alias("key"))
+    keys = spark.range(n_keys).select(F.col("id").alias("key"))
     # warm-up: python worker pool + codegen, excluded from the timing
     B.bank_len(B.build_bank(keys.limit(200_000), "key", variant="xor8",
                             num_shards=64, dedup="kernel"))
@@ -72,8 +74,8 @@ def main() -> None:
     expected_bytes = B.bank_expected_size_bytes(bank)
 
     # zero false negatives on a 2M sampled member subset
-    stride = max(1, N_KEYS // N_PROBES)
-    members = spark.range(0, N_KEYS, stride).select(F.col("id").alias("key"))
+    stride = max(1, n_keys // N_PROBES)
+    members = spark.range(0, n_keys, stride).select(F.col("id").alias("key"))
     t1 = time.perf_counter()
     mrow = (
         B.contains(members, "key", bank, "hit")
@@ -83,10 +85,10 @@ def main() -> None:
     )
     probe_sec = time.perf_counter() - t1
 
-    # FPP on held-out probes (disjoint from [0, N_KEYS))
+    # FPP on held-out probes (disjoint from [0, n_keys))
     frow = (
         B.contains(
-            spark.range(2 * N_KEYS, 2 * N_KEYS + N_PROBES)
+            spark.range(2 * n_keys, 2 * n_keys + N_PROBES)
             .select(F.col("id").alias("key")),
             "key", bank, "hit",
         )
@@ -97,7 +99,7 @@ def main() -> None:
 
     fpp = float(frow["fpp"])
     out = {
-        "n_keys": N_KEYS,
+        "n_keys": n_keys,
         "cpus": CPUS,
         "variant": "xor8",
         "num_shards": num_shards,
@@ -121,12 +123,12 @@ def main() -> None:
         "reference": "xor8_test.rs:205-215 (ignored 1B-key test); "
                      "FPP bound xor8_test.rs:78-87",
     }
-    assert total == N_KEYS, (total, N_KEYS)
+    assert total == n_keys, (total, n_keys)
     assert out["zero_false_negatives"], (mrow["h"], mrow["n"])
     assert fpp <= 0.004, fpp
     assert out["space_geometry_exact"], (size_bytes, expected_bytes)
 
-    path = os.path.join(REPO, "BENCH", f"big_build_{N_KEYS // 1_000_000}m.json")
+    path = os.path.join(REPO, "BENCH", f"big_build_{n_keys // 1_000_000}m.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out, indent=2))

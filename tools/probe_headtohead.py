@@ -29,8 +29,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-N_KEYS = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
-REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
@@ -38,27 +36,31 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from tools.pyfiles import driver_heap
     from xorfilter_spark import bank as B
+
+    n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("probe-headtohead")
         .config("spark.sql.shuffle.partitions", str(max(CPUS * 2, 16)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", driver_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    keys = spark.range(N_KEYS).select(F.col("id").alias("key"))
+    keys = spark.range(n_keys).select(F.col("id").alias("key"))
     bank = B.build_bank(
         keys, "key", variant="xor8", num_shards=max(64, CPUS * 8), dedup="kernel"
     ).cache()
     B.bank_len(bank)  # materialize + warm the worker pool
 
-    probes = spark.range(N_KEYS // 2, N_KEYS + N_KEYS // 2).select(
+    probes = spark.range(n_keys // 2, n_keys + n_keys // 2).select(
         F.col("id").alias("key")
     )
     wide = probes.withColumn("payload", F.repeat(F.lit("x"), 400))
@@ -91,7 +93,7 @@ def main() -> None:
     }
 
     results: dict[str, list[float]] = {k: [] for k in shapes}
-    for _ in range(REPS):  # interleave: every rep touches every shape
+    for _ in range(reps):  # interleave: every rep touches every shape
         for name, fn in shapes.items():
             t0 = time.perf_counter()
             fn().agg(
@@ -102,9 +104,9 @@ def main() -> None:
     spark.stop()
 
     out = {
-        "n_keys": N_KEYS,
+        "n_keys": n_keys,
         "cpus": CPUS,
-        "reps": REPS,
+        "reps": reps,
         "best": {k: min(v) for k, v in results.items()},
         "samples": results,
     }

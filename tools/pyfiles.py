@@ -1,5 +1,6 @@
 """Package xorfilter_spark as a --py-files zip (the north rule's
-``spark-submit --py-files`` distribution unit).
+``spark-submit --py-files`` distribution unit), and size a driver heap for
+this host.
 
 The zip holds only the library's .py sources, laid out so
 ``import xorfilter_spark`` resolves from the zip root — exactly what a
@@ -30,6 +31,14 @@ def make_pyfiles_zip(dst: str) -> str:
                 rel = os.path.relpath(full, REPO)
                 z.write(full, rel)
     return dst
+
+
+def driver_heap() -> str:
+    """Half of this host's RAM as a JVM heap size: a heap allowed to grow
+    past RAM gets the driver killed by the kernel's OOM killer instead of
+    failing with a Java ``OutOfMemoryError``."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, ram // 2**31)}g"
 
 
 def spark_submit_path() -> str:

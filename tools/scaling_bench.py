@@ -30,13 +30,9 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from pyfiles import make_pyfiles_zip, spark_submit_path  # noqa: E402
+from pyfiles import driver_heap, make_pyfiles_zip, spark_submit_path  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-N_KEYS = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
-SMALL = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-LARGE = SMALL * 4
 
 WORKER = r"""
 import json, sys, time
@@ -82,29 +78,29 @@ print(json.dumps({"cores": cores, "n_keys": total, "shards": shards,
 """
 
 
-def _submit_cmd(cores: int, worker_py: str, zip_path: str) -> list[str]:
+def _submit_cmd(cores: int, n_keys: int, worker_py: str, zip_path: str) -> list[str]:
     shards = 256
     return [
         spark_submit_path(),
         "--master", f"local[{cores}]",
         "--py-files", zip_path,
-        "--driver-memory", "48g",
+        "--driver-memory", driver_heap(),
         "--conf", f"spark.sql.shuffle.partitions={shards}",
         "--conf", "spark.sql.adaptive.enabled=false",
         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=500000",
         "--conf", "spark.ui.enabled=false",
-        worker_py, str(cores), str(N_KEYS),
+        worker_py, str(cores), str(n_keys),
     ]
 
 
-def run(cores: int) -> dict | None:
+def run(cores: int, n_keys: int) -> dict | None:
     with tempfile.TemporaryDirectory(prefix="scaling-submit-") as tmp:
         zip_path = make_pyfiles_zip(os.path.join(tmp, "xorfilter_spark.zip"))
         worker_py = os.path.join(tmp, "scaling_worker.py")
         with open(worker_py, "w") as f:
             f.write(WORKER)
         out = subprocess.run(
-            _submit_cmd(cores, worker_py, zip_path),
+            _submit_cmd(cores, n_keys, worker_py, zip_path),
             capture_output=True, text=True, timeout=3600,
             cwd=tmp,  # not the repo: imports must come from the zip
         )
@@ -117,31 +113,35 @@ def run(cores: int) -> dict | None:
 
 
 def main() -> None:
-    samples: dict[int, list[dict]] = {SMALL: [], LARGE: []}
-    for pair in range(REPS):
-        for cores in (SMALL, LARGE):  # A/B alternation
-            r = run(cores)
+    n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
+    small = int(sys.argv[2]) if len(sys.argv) > 2 else 8
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    large = small * 4
+    samples: dict[int, list[dict]] = {small: [], large: []}
+    for pair in range(reps):
+        for cores in (small, large):  # A/B alternation
+            r = run(cores, n_keys)
             if r is None:
                 continue
             samples[cores].append(r)
             print(f"pair {pair} cores {cores}: build {r['build_sec']}s "
                   f"({r['build_keys_per_sec']}/s) probe {r['probe_sec']}s",
                   file=sys.stderr, flush=True)
-    if not samples[SMALL] or not samples[LARGE]:
+    if not samples[small] or not samples[large]:
         raise SystemExit("no successful samples for one config")
 
-    best_small = max(samples[SMALL], key=lambda r: r["build_keys_per_sec"])
-    best_large = max(samples[LARGE], key=lambda r: r["build_keys_per_sec"])
-    bp_small = max(samples[SMALL], key=lambda r: r["probe_keys_per_sec"])
-    bp_large = max(samples[LARGE], key=lambda r: r["probe_keys_per_sec"])
-    ratio = LARGE / SMALL
+    best_small = max(samples[small], key=lambda r: r["build_keys_per_sec"])
+    best_large = max(samples[large], key=lambda r: r["build_keys_per_sec"])
+    bp_small = max(samples[small], key=lambda r: r["probe_keys_per_sec"])
+    bp_large = max(samples[large], key=lambda r: r["probe_keys_per_sec"])
+    ratio = large / small
     rev = subprocess.run(
         ["git", "rev-parse", "--short", "HEAD"], capture_output=True,
         text=True, cwd=REPO, timeout=10,
     ).stdout.strip()
     print(json.dumps({
-        "n_keys": N_KEYS,
-        "reps": REPS,
+        "n_keys": n_keys,
+        "reps": reps,
         "selection": "best-of-k per config this invocation",
         "measured_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "rev": rev,

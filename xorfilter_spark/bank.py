@@ -2,9 +2,10 @@
 
 A *bank* is a small DataFrame with one row per hash-prefix shard.  Keys are
 hashed to 64-bit digests JVM-side (``F.xxhash64`` by default), sharded by
-their top-k digest bits (disjoint key spaces), and each shard's filter is
-constructed by a vectorized numpy kernel inside one ``mapInPandas`` — no
-per-row Python anywhere.
+their top-k digest bits (disjoint key spaces), packed JVM-side into one
+digest list per shard, and each shard's filter is constructed by a
+vectorized numpy kernel inside one ``mapInPandas`` — no per-row Python
+anywhere.
 
 This maps the reference's builder/filter lifecycle
 (/root/reference/src/xor8/builder.rs, src/fuse8.rs) onto Spark:
@@ -23,11 +24,18 @@ This maps the reference's builder/filter lifecycle
 
 Scale notes (designed for ~10^12 keys / 1000 executors):
 
-- one shuffle total: ``repartition(tasks, shard)``, then one ``mapInPandas``
-  peels each task's shards — dedup happens inside the kernel
-  (``np.unique``), or map-side via ``dropDuplicates`` when
-  ``dedup='pre'`` (partial hash aggregation kills duplicate floods before
-  the shuffle — this is the skew mitigation for re-crawled hot urls).
+- one shuffle total: ``repartition(tasks, shard)``, then a
+  ``groupBy(shard)`` that the shuffle already satisfies packs each shard's
+  digests into one ``collect_list`` row, and one ``mapInPandas`` peels
+  each packed row — dedup happens inside the kernel (``np.unique``), or
+  map-side via ``dropDuplicates`` when ``dedup='pre'`` (partial hash
+  aggregation kills duplicate floods before the shuffle — this is the
+  skew mitigation for re-crawled hot urls).
+- the packing holds a task's digests, boxed, in the JVM heap until it
+  emits them: 80-120 B per digest of the largest shards in flight
+  (measured, see ``build_bank``), and one shard may hold at most
+  ~2.68×10⁸ digests (Spark's array limit, raised as an error).  Larger
+  inputs need more shards or a larger heap.
 - shard ids come from the *top* digest bits, so shard sizes are uniform
   regardless of key skew (hash uniformity), and each shard's digest set is
   an exact partition of the key space -> shard-local filters merge by
@@ -248,82 +256,62 @@ def shard_col(digest: Column, num_shards: int) -> Column:
 # ---------------------------------------------------------------------------
 
 def _build_partition_kernel(variant: str, num_shards: int, hash_strategy: str):
-    """mapInPandas kernel: build every shard that hash-landed in this
-    partition.  Digests cross the JVM->Python Arrow boundary exactly once;
-    the shard shuffle happens entirely JVM-side (Tungsten rows) via
-    ``repartition(tasks, shard)`` with tasks decoupled from the shard
-    count (``_build_tasks``).  Shard ids are recomputed from the digests
-    in numpy, so only the 8-byte digest column is ever shipped.
-    """
-    inner = _build_kernel(variant, num_shards, hash_strategy)
-    k = int(num_shards).bit_length() - 1
+    """mapInPandas kernel over packed rows (``_build_shards``): each row
+    holds one shard id and the list of that shard's digests, so the peel
+    runs once per row and the rows come out as bank rows."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [
-            pdf[DIGEST].to_numpy(dtype=np.int64) for pdf in batches
-        ]
-        if not chunks:
-            return
-        d = np.concatenate(chunks)
-        if d.size == 0:
-            return
-        if k:
-            s = (d.astype(np.uint64) >> np.uint64(64 - k)).astype(np.int64)
-            order = np.argsort(s, kind="stable")
-            ds, ss = d[order], s[order]
-            bounds = np.searchsorted(ss, np.arange(num_shards + 1))
-            for sh in np.unique(ss):
-                lo, hi = bounds[sh], bounds[sh + 1]
-                yield inner(
-                    pd.DataFrame({SHARD: int(sh), DIGEST: ds[lo:hi]})
-                )
-        else:
-            yield inner(pd.DataFrame({SHARD: 0, DIGEST: d}))
+        for pdf in batches:
+            if len(pdf):
+                yield pd.DataFrame([
+                    _build_shard(variant, num_shards, hash_strategy, int(s), d)
+                    for s, d in zip(pdf[SHARD], pdf[DIGEST])
+                ])
 
     return fn
 
 
-def _build_kernel(variant: str, num_shards: int, hash_strategy: str):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.perf_counter()
-        shard = int(pdf[SHARD].iloc[0])
-        digests = pdf[DIGEST].to_numpy(dtype=np.int64).astype(np.uint64)
-        num_rows = int(digests.size)
-        if variant.startswith("xor"):
-            fp_bits = 8 if variant == "xor8" else 16
-            r = build_xor8(digests, fp_bits=fp_bits)
-            row = {
-                "block_length": r["block_length"],
-                "segment_length": None,
-                "segment_count": None,
-                "fp_bits": fp_bits,
-                "duplicates": num_rows - r["num_keys"],
-            }
-        else:
-            fp_bits, arity = _fuse_params(variant)
-            r = build_fuse(digests, fp_bits=fp_bits, arity=arity)
-            row = {
-                "block_length": None,
-                "segment_length": r["segment_length"],
-                "segment_count": r["segment_count"],
-                "fp_bits": r["fp_bits"],
-                "duplicates": r["duplicates"],
-            }
-        row.update(
-            shard=shard,
-            variant=variant,
-            seed=_to_i64(r["seed"]),
-            num_keys=r["num_keys"],
-            num_rows=num_rows,
-            fingerprints=r["fingerprints"].tobytes(),
-            retries=r["retries"],
-            build_ms=(time.perf_counter() - t0) * 1000.0,
-            num_shards=num_shards,
-            hash_strategy=hash_strategy,
-        )
-        return pd.DataFrame([row])
-
-    return fn
+def _build_shard(
+    variant: str, num_shards: int, hash_strategy: str, shard: int, digests
+) -> dict:
+    """One bank row: the filter over one shard's (not necessarily
+    distinct) digests."""
+    t0 = time.perf_counter()
+    digests = np.asarray(digests, dtype=np.int64).astype(np.uint64)
+    num_rows = int(digests.size)
+    if variant.startswith("xor"):
+        fp_bits = 8 if variant == "xor8" else 16
+        r = build_xor8(digests, fp_bits=fp_bits)
+        row = {
+            "block_length": r["block_length"],
+            "segment_length": None,
+            "segment_count": None,
+            "fp_bits": fp_bits,
+            "duplicates": num_rows - r["num_keys"],
+        }
+    else:
+        fp_bits, arity = _fuse_params(variant)
+        r = build_fuse(digests, fp_bits=fp_bits, arity=arity)
+        row = {
+            "block_length": None,
+            "segment_length": r["segment_length"],
+            "segment_count": r["segment_count"],
+            "fp_bits": r["fp_bits"],
+            "duplicates": r["duplicates"],
+        }
+    row.update(
+        shard=shard,
+        variant=variant,
+        seed=_to_i64(r["seed"]),
+        num_keys=r["num_keys"],
+        num_rows=num_rows,
+        fingerprints=r["fingerprints"].tobytes(),
+        retries=r["retries"],
+        build_ms=(time.perf_counter() - t0) * 1000.0,
+        num_shards=num_shards,
+        hash_strategy=hash_strategy,
+    )
+    return row
 
 
 def _local_distinct_kernel():
@@ -386,14 +374,29 @@ def build_bank(
     carried at most ``salt_partitions`` times).  All three modes produce
     byte-identical banks (tests/test_bank.py::test_duplicate_flood_skew).
 
-    Plan shape: the shard shuffle is a JVM-side ``repartition(tasks,
-    shard)`` over Tungsten rows — task count sized for the cluster, NOT
-    one-per-shard; each task builds all shards that land in it (see
-    ``_build_tasks``) — and the only JVM->Python Arrow crossing is the
-    single 8-byte digest column into ``mapInPandas``, once.  (A
-    groupBy.applyInPandas over raw rows pays per-group pandas assembly, and
-    a python-side pack pays the Arrow boundary twice — both measured slower
-    at 10^7 keys, and worse at 10^12.)
+    Plan shape (``_build_shards``): the shard shuffle is a JVM-side
+    ``repartition(tasks, shard)`` over Tungsten rows — task count sized
+    for the cluster, NOT one-per-shard; each task builds all shards that
+    land in it (see ``_build_tasks``).  A ``groupBy(shard)`` +
+    ``collect_list`` behind it (no second Exchange) packs each shard's
+    digests into one row, so the only JVM->Python Arrow crossing is one
+    row per shard into ``mapInPandas``: Spark sizes and writes Arrow input
+    per row, and per-digest rows cost about a quarter of a build's CPU.
+    (A groupBy.applyInPandas over raw rows pays per-group pandas assembly,
+    and a python-side pack pays the Arrow boundary twice — both measured
+    slower at 10^7 keys; packing before the shuffle falls back to
+    sort-based aggregation once a map task holds >128 shards.)
+
+    Memory: the packing aggregate holds a task's digests, boxed, in the
+    JVM heap until it emits them, and the largest shards in flight cost
+    the most.  One 12.5M-digest shard needs 1-1.5 GB of heap (80-120 B per
+    digest: it fails at ``spark.driver.memory=1g`` and builds at 1.5g),
+    where the same 12.5M digests in 4 or 256 shards build at 1g.  The
+    JVM's ``VmHWM`` there (xor8, ``local[4]``; per-digest rows -> packed)
+    went 654 -> 1,192 MB at 256 shards and 580 -> 1,705 MB at 4.  One
+    shard holds at most ~2.68×10⁸ digests; past that Spark fails the build
+    with ``COLLECTION_SIZE_LIMIT_EXCEEDED``.  Give a larger input more
+    shards (a smaller ``target_keys_per_shard``) or a larger heap.
     """
     if variant not in VARIANTS:
         raise ValueError(f"variant must be one of {VARIANTS}")
@@ -444,21 +447,34 @@ def build_bank(
             ]))
         )
     sharded = keyed.withColumn(SHARD, shard_col(F.col(DIGEST), num_shards))
-    return (
-        sharded.repartition(_build_tasks(df.sparkSession, num_shards), SHARD)
-        .select(DIGEST)
-        .mapInPandas(
-            _build_partition_kernel(variant, num_shards, hash_strategy),
-            BANK_SCHEMA,
-        )
+    return _build_shards(
+        sharded, _build_tasks(df.sparkSession, num_shards),
+        variant, num_shards, hash_strategy,
+    )
+
+
+def _build_shards(
+    sharded: DataFrame, tasks: int, variant: str, num_shards: int,
+    hash_strategy: str,
+) -> DataFrame:
+    """The one build plan (``build_bank``, ``resume_build``,
+    ``streaming.incremental.rebuild_dirty_shards``): (DIGEST, SHARD) rows
+    -> bank rows.  Plan shape and memory: ``build_bank``."""
+    packed = (
+        sharded.repartition(tasks, SHARD)
+        .groupBy(SHARD)
+        .agg(F.collect_list(DIGEST).alias(DIGEST))
+    )
+    return packed.mapInPandas(
+        _build_partition_kernel(variant, num_shards, hash_strategy), BANK_SCHEMA
     )
 
 
 def _build_tasks(spark, num_shards: int) -> int:
     """Shuffle-partition (= task) count for the build, decoupled from the
     shard layout.  Shards must co-locate (the repartition key is SHARD)
-    but one task builds MANY shards sequentially — the kernel splits its
-    partition by shard id (`_build_partition_kernel`) — so the task count
+    but one task builds MANY shards sequentially — one packed row per
+    shard (`_build_shards`) — so the task count
     is sized for the cluster (~4 waves per core for dynamic balance), not
     for the shard count.  Every task pays a fixed Python-worker cost, so
     one task per shard at 1024 L2-resident shards ran slower than 256
@@ -1056,18 +1072,9 @@ def resume_build(
     sharded = keyed.withColumn(SHARD, shard_col(F.col(DIGEST), num_shards))
     if done:
         sharded = sharded.where(~F.col(SHARD).isin(*done))
-    # same one-Arrow-crossing plan as build_bank: JVM-side shard shuffle
-    # over Tungsten rows, digests cross to Python exactly once (resume used
-    # to take the slower groupBy.applyInPandas path — VERDICT r1 item 7)
-    new_rows = (
-        sharded.repartition(
-            _build_tasks(spark, max(num_shards - len(done), 1)), SHARD
-        )
-        .select(DIGEST)
-        .mapInPandas(
-            _build_partition_kernel(variant, num_shards, hash_strategy),
-            BANK_SCHEMA,
-        )
+    new_rows = _build_shards(
+        sharded, _build_tasks(spark, max(num_shards - len(done), 1)),
+        variant, num_shards, hash_strategy,
     )
     if existing is not None and done:
         new_rows.write.mode("append").parquet(checkpoint_path)

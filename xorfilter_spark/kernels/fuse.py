@@ -59,19 +59,6 @@ def _mod3(x: np.ndarray) -> np.ndarray:
     return np.where(x > 2, x - 3, x)
 
 
-def _hash_at(index: np.ndarray, hashes: np.ndarray, geom: dict) -> np.ndarray:
-    """binary_fuse8_hash(index, hash) vectorized over matching arrays
-    (reference src/fuse8.rs:194-203)."""
-    from ..hashing import mulhi
-
-    h = mulhi(hashes, geom["segment_count_length"])
-    h += index.astype(np.uint64) * np.uint64(geom["segment_length"])
-    hh = hashes & np.uint64((1 << 36) - 1)
-    shift = (np.uint64(36) - np.uint64(18) * index.astype(np.uint64))
-    h ^= (hh >> shift) & np.uint64(geom["segment_length_mask"])
-    return h.astype(np.int64)
-
-
 def _slots(hashes: np.ndarray, geom: dict, arity: int) -> np.ndarray:
     """(arity, n) slot indices via the batch addressing
     (src/fuse8.rs:182-191 for 3-wise; fuse4_hash_all for 4-wise)."""

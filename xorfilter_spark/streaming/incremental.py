@@ -22,10 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..bank import (
-    BANK_SCHEMA,
     DIGEST,
     SHARD,
-    _build_partition_kernel,
+    _build_shards,
     _build_tasks,
     _hadoop_fs,
     _path_exists,
@@ -69,19 +68,11 @@ def rebuild_dirty_shards(
     """
     if not dirty:
         return
-    # same one-Arrow-crossing plan as build_bank (VERDICT r2 item 5): a
-    # JVM-side shard shuffle over Tungsten rows into _build_tasks tasks,
-    # only the 8-byte digest column crossing into mapInPandas; the kernel
-    # dedups via np.unique (per-shard dedup IS global dedup — shards
-    # partition the digest space)
+    # the build_bank plan (_build_shards); the kernel dedups via np.unique
+    # (per-shard dedup IS global dedup — shards partition the digest space)
     log = spark.read.parquet(log_path).where(F.col(SHARD).isin(dirty))
-    rebuilt = (
-        log.repartition(_build_tasks(spark, len(dirty)), SHARD)
-        .select(DIGEST)
-        .mapInPandas(
-            _build_partition_kernel(variant, num_shards, hash_strategy),
-            BANK_SCHEMA,
-        )
+    rebuilt = _build_shards(
+        log, _build_tasks(spark, len(dirty)), variant, num_shards, hash_strategy
     )
     if _path_exists(spark, bank_path):
         existing = spark.read.parquet(bank_path).where(~F.col("shard").isin(dirty))
