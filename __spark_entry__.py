@@ -320,8 +320,8 @@ def q_bank_prefiltered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join shuffles only surviving rows (~selectivity + 2^-16 leakage).
     r4: BOTH probe paths ride the gate — the broadcast-bank prune feeds
     the hashed aggregate, and the beyond-broadcast shard-cogroup prune
-    (probe='cogroup', shuffle join-back) must produce the identical
-    aggregate (`cogroup_path_identical`; every sum here is
+    (probe='cogroup', digest join-back planned by AQE) must produce the
+    identical aggregate (`cogroup_path_identical`; every sum here is
     order-independent: counts, integral-valued doubles < 2^53, and a
     decimal sum)."""
     from xorfilter_spark.operators.joins import prefilter_join

@@ -12,12 +12,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from pyspark.sql import SparkSession
 
+    from tools.pyfiles import driver_heap
+
     s = (
         SparkSession.builder.master("local[4]")
         .appName("xorfilter-spark-tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", driver_heap())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

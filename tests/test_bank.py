@@ -105,14 +105,6 @@ def test_contains_join_digest_wide_payload_and_duplicates(spark, lineitem):
             xb.contains_join(probes, "l_partkey", b, "hit", payload="auto")
         )
     assert "Join" in auto_plan  # auto chose the digest/join-back shape
-    # the forced join-back modes must produce identical results to the
-    # default AQE-decided join-back
-    for mode in ("broadcast", "shuffle"):
-        forced = xb.contains_join(
-            probes, "l_partkey", b, "hit", payload="digest", join_back=mode
-        )
-        assert forced.count() == n
-        assert forced.where(~F.col("hit")).count() == 0
 
 
 @pytest.mark.parametrize("variant", xb.VARIANTS)
@@ -130,20 +122,20 @@ def test_contains_join_cogroup_matches_contains(spark, lineitem, variant):
     cases = [(wide, "rows", False), (wide, "digest", True),
              (wide, "auto", True), (narrow, "auto", False)]
     with _broadcast_threshold(spark, "-1"):
-        for probes, payload, join_back in cases:
+        for probes, payload, joined in cases:
             want = xb.contains(probes, "key", b, "hit").orderBy("key").collect()
             assert sum(r["hit"] for r in want) >= members.count()
             out = xb.contains_join(probes, "key", b, "hit", payload=payload)
             plan = _plan(out)
             assert "FlatMapCoGroupsInPandas" in plan
-            assert ("Join" in plan) == join_back, (payload, probes.columns)
+            assert ("Join" in plan) == joined, (payload, probes.columns)
             assert out.orderBy("key").collect() == want, (payload, probes.columns)
 
 
 def test_contains_join_routes_small_bank_to_broadcast(spark, lineitem):
     """Under the default threshold a small bank takes the broadcast probe
     (a Python eval node, no cogroup); threshold -1 or an explicit payload
-    or join_back keeps the cogroup plan.  Every shape answers alike with
+    keeps the cogroup plan.  Every shape answers alike with
     the same schema, and repeated routed calls on one bank reuse one
     broadcast instead of leaving a driver temp file each."""
     b = xb.build_bank(lineitem, "l_partkey", variant="xor8", num_shards=4)
@@ -168,7 +160,6 @@ def test_contains_join_routes_small_bank_to_broadcast(spark, lineitem):
         assert "FlatMapCoGroupsInPandas" not in probe()
     assert len(os.listdir(temp_dir)) == n_files
     assert "FlatMapCoGroupsInPandas" in probe(payload="digest")
-    assert "FlatMapCoGroupsInPandas" in probe(join_back="broadcast")
     with _broadcast_threshold(spark, "-1"):
         assert "FlatMapCoGroupsInPandas" in probe()
 
@@ -389,10 +380,9 @@ def test_auto_shards(spark, lineitem):
 
 def test_duplicate_flood_skew(spark):
     """Re-crawl flood: 50k rows over only 200 distinct keys (250x dup ratio).
-    All three dedup modes must absorb the skew and produce byte-identical
-    banks (the north rule's skewed-url mitigation: map-side partial
-    aggregation for 'pre', per-shard np.unique for 'kernel', literal salted
-    repartition + local distinct for 'salted')."""
+    Both dedup modes must absorb the skew and produce byte-identical banks
+    (map-side partial aggregation for 'pre', per-shard np.unique for
+    'kernel')."""
     from pyspark.sql import functions as F
 
     from xorfilter_spark import bank as B
@@ -402,20 +392,16 @@ def test_duplicate_flood_skew(spark):
     )
     bank_pre = B.build_bank(flood, "url", num_shards=8, dedup="pre")
     bank_kernel = B.build_bank(flood, "url", num_shards=8, dedup="kernel")
-    bank_salt = B.build_bank(
-        flood, "url", num_shards=8, dedup="salted", salt_partitions=4
-    )
     rows_pre = {r["shard"]: r for r in bank_pre.collect()}
     rows_k = {r["shard"]: r for r in bank_kernel.collect()}
-    rows_s = {r["shard"]: r for r in bank_salt.collect()}
-    assert set(rows_pre) == set(rows_k) == set(rows_s)
+    assert set(rows_pre) == set(rows_k)
     for s in rows_pre:
-        for other in (rows_k, rows_s):
-            assert rows_pre[s]["seed"] == other[s]["seed"]
-            assert rows_pre[s]["num_keys"] == other[s]["num_keys"]
-            assert bytes(rows_pre[s]["fingerprints"]) == bytes(other[s]["fingerprints"])
+        assert rows_pre[s]["seed"] == rows_k[s]["seed"]
+        assert rows_pre[s]["num_keys"] == rows_k[s]["num_keys"]
+        assert bytes(rows_pre[s]["fingerprints"]) == bytes(rows_k[s]["fingerprints"])
     assert B.bank_len(bank_kernel) == 200
-    assert B.bank_len(bank_salt) == 200
+    with pytest.raises(ValueError, match="dedup"):
+        B.build_bank(flood, "url", num_shards=8, dedup="salted")
     # and the dup-inflated row count is visible in lineage for 'kernel'
     total_rows = sum(r["num_rows"] for r in rows_k.values())
     assert total_rows == 50_000

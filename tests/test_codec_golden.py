@@ -182,6 +182,36 @@ def test_tl2_file_roundtrip_bank(spark, tmp_path):
     assert probed.where(~F.col("hit")).count() == 0
 
 
+def test_rust_tl2_file_through_spark_probe(spark, tmp_path):
+    """A ^TL2 file the Rust crate wrote reads as a bank whose ``contains``
+    answers exactly as the crate's own probe did: every member found and
+    the recorded false-positive indices, no more and no fewer.  The
+    crate's BuildHasherDefault writes an empty hasher payload, so the
+    bank must probe with SipHash-1-3 digests."""
+    import shutil
+
+    from xorfilter_spark import bank as B
+
+    golden = _load_golden("rust-golden.json")
+    for kind, member_keys, other_keys in (
+        ("str", [f"key-{i:05d}" for i in range(10_000)],
+         [f"miss-{i:05d}" for i in range(10_000)]),
+        ("u64", list(range(10_000)), list(range(10_000, 20_000))),
+    ):
+        g = golden[f"rust_{kind}"]
+        d = tmp_path / kind
+        d.mkdir()
+        shutil.copy(os.path.join(RUST_GOLDEN_DIR, g["file"]), d / g["file"])
+        bank = B.read_bank_tl2(spark, str(d))
+        assert bank.first()["hash_strategy"] == "siphash13"
+        schema = "key string" if kind == "str" else "key long"
+        members = spark.createDataFrame([(k,) for k in member_keys], schema)
+        others = spark.createDataFrame(list(enumerate(other_keys)), "i long, " + schema)
+        assert B.contains(members, "key", bank, "hit").where(~F.col("hit")).count() == 0
+        hits = B.contains(others, "key", bank, "hit").where("hit").select("i")
+        assert sorted(r["i"] for r in hits.collect()) == g["miss_hit_indices"], kind
+
+
 def test_tl2_write_side_golden(tmp_path):
     """Write-side layout check: our emitted bytes carry the ^TL2 signature,
     parse as V2, and field-roundtrip — including an empty hasher payload

@@ -48,12 +48,14 @@ def main() -> int:
     import __spark_entry__ as E
     from pyspark.sql import SparkSession
 
+    from tools.pyfiles import driver_heap
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("oracle-check")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "12g")
+        .config("spark.driver.memory", driver_heap())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

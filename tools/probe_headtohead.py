@@ -1,14 +1,12 @@
-"""Interleaved head-to-head of the contains_join payload/join-back shapes.
+"""Interleaved head-to-head of the contains_join payload shapes.
 
-Measures, at BENCH-scale probe counts, the four probe-path shapes on a
+Measures, at BENCH-scale probe counts, the two cogroup probe shapes on a
 narrow (bare 8-byte key) and a wide (~450 B/row) probe table:
 
-  rows              full rows through the cogroup (one shuffle, Arrow
-                    freight grows with width)
-  digest+broadcast  (digest, shard) cogroup + broadcast hash join-back
-                    (r4 default — probe rows never shuffled)
-  digest+shuffle    the r3 shape (sort-merge join-back) kept as the
-                    >10^8-distinct-key escape hatch
+  rows    full rows through the cogroup (one shuffle, Arrow freight grows
+          with width)
+  digest  (digest, shard) cogroup + a join-back that AQE plans from the
+          hit table's runtime size
 
 Shapes are interleaved A/B/A/B within one JVM so hypervisor-steal drift
 hits all of them equally; per-shape best-of-REPS is reported.  Writes
@@ -72,23 +70,11 @@ def main() -> None:
         "narrow_digest_auto": lambda: B.contains_join(
             probes, "key", bank, "hit", payload="digest"
         ),
-        "narrow_digest_broadcast": lambda: B.contains_join(
-            probes, "key", bank, "hit", payload="digest", join_back="broadcast"
-        ),
-        "narrow_digest_shuffle": lambda: B.contains_join(
-            probes, "key", bank, "hit", payload="digest", join_back="shuffle"
-        ),
         "wide_rows": lambda: B.contains_join(
             wide, "key", bank, "hit", payload="rows"
         ),
         "wide_digest_auto": lambda: B.contains_join(
             wide, "key", bank, "hit", payload="digest"
-        ),
-        "wide_digest_broadcast": lambda: B.contains_join(
-            wide, "key", bank, "hit", payload="digest", join_back="broadcast"
-        ),
-        "wide_digest_shuffle": lambda: B.contains_join(
-            wide, "key", bank, "hit", payload="digest", join_back="shuffle"
         ),
     }
 

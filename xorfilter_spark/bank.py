@@ -41,13 +41,14 @@ Scale notes (designed for ~10^12 keys / 1000 executors):
   an exact partition of the key space -> shard-local filters merge by
   concatenation.
 - the probe is a broadcast of (seed + fingerprint arrays) plus a vectorized
-  three-gather XOR per batch.  The bank is collected and broadcast once per
-  bank DataFrame object, and every later probe of that object reuses the
-  broadcast.  For banks beyond broadcast limits use ``contains_join``,
-  which co-partitions probes and bank rows by shard (and broadcasts, like
-  Spark's join planner, when the bank's size estimate is within
-  ``autoBroadcastJoinThreshold``).  Both paths answer with the same flat
-  lookup kernel, ``_lookup_flat``.
+  three- or four-gather XOR per batch.  The bank is collected and
+  broadcast once per bank DataFrame object, and every later probe of that
+  object reuses the broadcast.  For banks beyond broadcast limits use
+  ``contains_join``, which co-partitions probes and bank rows by shard (and
+  broadcasts, like Spark's join planner, when the bank's size estimate is
+  within ``autoBroadcastJoinThreshold``).  Both paths answer with the same
+  lookup, ``kernels.lookup.lookup_flat``, which addresses slots with the
+  ``hashing`` functions the builders peel with.
 """
 
 from __future__ import annotations
@@ -63,6 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .kernels.fuse import build_fuse
+from .kernels.lookup import bank_to_flat, lookup_flat
 from .kernels.xor8 import build_xor8
 
 DIGEST = "__digest"
@@ -314,22 +316,6 @@ def _build_shard(
     return row
 
 
-def _local_distinct_kernel():
-    """mapInPandas: per-partition np.unique over the digest column (the
-    salted pre-aggregation stage — each partition holds a random slice of a
-    hot key's flood, so local distinct caps global dup carriage at
-    salt_partitions copies per key)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf[DIGEST].to_numpy(dtype=np.int64) for pdf in batches]
-        if chunks:
-            d = np.unique(np.concatenate(chunks))
-            if d.size:
-                yield pd.DataFrame({DIGEST: d})
-
-    return fn
-
-
 def build_bank(
     df: DataFrame,
     key_col,
@@ -338,7 +324,6 @@ def build_bank(
     hash_strategy: str = "xxhash64",
     dedup: str = "kernel",
     target_keys_per_shard: int | None = None,
-    salt_partitions: int = 8,
 ) -> DataFrame:
     """Build a filter bank over ``df[key_col]``.
 
@@ -365,14 +350,14 @@ def build_bank(
     ``dedup='pre'`` inserts ``dropDuplicates`` first (its own shuffle, but
     with Catalyst's map-side partial aggregate): choose it when duplicates
     dominate (re-crawl floods with dup ratio >~2x), where killing them
-    before the shard shuffle outweighs the second pass.
-    ``dedup='salted'`` is the literal salted-repartition path the north
-    star names: stage 1 repartitions on (shard, salt) — identical digests
-    of a hot re-crawled url SPLIT across ``salt_partitions`` tasks instead
-    of landing on one — and runs a per-partition ``np.unique``; stage 2 is
-    the normal shard shuffle over locally-distinct digests (each key now
-    carried at most ``salt_partitions`` times).  All three modes produce
-    byte-identical banks (tests/test_bank.py::test_duplicate_flood_skew).
+    before the shard shuffle outweighs the second pass.  Both modes
+    produce byte-identical banks (tests/test_bank.py::
+    test_duplicate_flood_skew), and each wins one regime.  A salted
+    two-stage repartition (per-partition ``np.unique`` on (shard, salt)
+    before the shard shuffle) lost to both in both regimes (8 shards,
+    ``local[4]``, CPU-s kernel/pre/salted: 12.8/7.8/18.7 with 4M flood rows
+    over 200 keys + 1M distinct, 7.8/12.1/15.1 with 0.4M flood rows + 2M
+    distinct), so it is not offered.
 
     Plan shape (``_build_shards``): the shard shuffle is a JVM-side
     ``repartition(tasks, shard)`` over Tungsten rows — task count sized
@@ -400,6 +385,8 @@ def build_bank(
     """
     if variant not in VARIANTS:
         raise ValueError(f"variant must be one of {VARIANTS}")
+    if dedup not in ("kernel", "pre"):
+        raise ValueError("dedup must be 'kernel' or 'pre'")
     if target_keys_per_shard is None:
         # xor capacity (1.23n+32) is near shard-size-independent (+32
         # slots/shard ~ 0.004 bits/key at this target), so size xor shards
@@ -425,27 +412,6 @@ def build_bank(
     )
     if dedup == "pre":
         keyed = keyed.dropDuplicates([DIGEST])
-    elif dedup == "salted":
-        # stage 1: salt is row-local (NOT a function of the key), so a
-        # single hot key's flood fans out over salt_partitions tasks; the
-        # per-partition np.unique then bounds what stage 2 shuffles
-        salted = keyed.withColumn(
-            SHARD, shard_col(F.col(DIGEST), num_shards)
-        ).withColumn(
-            "__salt",
-            F.pmod(F.monotonically_increasing_id(), F.lit(int(salt_partitions))),
-        )
-        keyed = (
-            salted.repartition(
-                _build_tasks(df.sparkSession, num_shards * int(salt_partitions)),
-                SHARD,
-                "__salt",
-            )
-            .select(DIGEST)
-            .mapInPandas(_local_distinct_kernel(), T.StructType([
-                T.StructField(DIGEST, T.LongType(), False)
-            ]))
-        )
     sharded = keyed.withColumn(SHARD, shard_col(F.col(DIGEST), num_shards))
     return _build_shards(
         sharded, _build_tasks(df.sparkSession, num_shards),
@@ -543,119 +509,6 @@ def bank_expected_size_bytes(bank: DataFrame) -> int:
 # probe
 # ---------------------------------------------------------------------------
 
-def _bank_to_flat(rows) -> dict:
-    """Flatten bank rows into per-shard parallel numpy arrays + ONE
-    concatenated fingerprint buffer, so a mixed-shard probe batch needs no
-    per-shard Python loop at all — every per-shard parameter (seed, geometry,
-    fingerprint offset) is gathered per ROW and the whole batch runs as a
-    single vectorized pass (VERDICT r1 item 1: the 256-entry dict loop was
-    the probe bottleneck at high shard counts)."""
-    num_shards = int(rows[0]["num_shards"])
-    variant = rows[0]["variant"]
-    fp_bits = int(rows[0]["fp_bits"])
-    fp_dtype = np.uint8 if fp_bits == 8 else np.dtype("<u2")
-
-    seed = np.zeros(num_shards, dtype=np.uint64)
-    off = np.zeros(num_shards, dtype=np.int64)
-    present = np.zeros(num_shards, dtype=bool)
-    bl = np.zeros(num_shards, dtype=np.uint64)      # xor8 block_length
-    sl = np.zeros(num_shards, dtype=np.uint64)      # fuse segment_length
-    mask = np.zeros(num_shards, dtype=np.uint64)    # fuse segment_length_mask
-    scl = np.zeros(num_shards, dtype=np.uint64)     # fuse segment_count_length
-
-    chunks = []
-    pos = 0
-    for r in sorted(rows, key=lambda r: int(r["shard"])):
-        s = int(r["shard"])
-        present[s] = True
-        seed[s] = _to_u64(int(r["seed"]))
-        off[s] = pos
-        arr = np.frombuffer(r["fingerprints"], dtype=fp_dtype)
-        chunks.append(arr)
-        pos += arr.size
-        if variant.startswith("xor"):
-            bl[s] = r["block_length"]
-        else:
-            sl[s] = r["segment_length"]
-            mask[s] = r["segment_length"] - 1
-            scl[s] = r["segment_count"] * r["segment_length"]
-    fp = np.concatenate(chunks) if chunks else np.zeros(1, dtype=fp_dtype)
-    return {
-        "num_shards": num_shards,
-        "k": num_shards.bit_length() - 1,
-        "variant": variant,
-        "arity": 3 if variant.startswith("xor") else _fuse_params(variant)[1],
-        "seed": seed,
-        "off": off,
-        "present": present,
-        "bl": bl,
-        "sl": sl,
-        "mask": mask,
-        "scl": scl,
-        "fp": fp,
-    }
-
-
-def _lookup_flat(
-    flat: dict, digests_i64: np.ndarray, shard: int | None = None
-) -> np.ndarray:
-    """Single-pass vectorized membership for a mixed-shard digest batch:
-    per-row parameter gathers + elementwise hash math + 3 fingerprint
-    gathers.  No sort, no per-shard slicing, no Python loop.
-
-    ``shard`` declares that every digest belongs to that one shard (a
-    cogroup group): the shard's parameters are then scalars and the
-    per-row gathers, which cost more than the hash math, are skipped."""
-    from .hashing import mulhi, murmur64, rotl64
-
-    u = digests_i64.astype(np.uint64)
-    k = flat["k"]
-    if shard is not None:
-        s = shard
-    elif k:
-        s = (u >> np.uint64(64 - k)).astype(np.int64)
-    else:
-        s = np.zeros(u.size, dtype=np.int64)
-    h = murmur64(u + flat["seed"][s])  # mixsplit with per-row seed
-    fp = flat["fp"]
-    off = flat["off"][s]
-    m32 = np.uint64(0xFFFFFFFF)
-    if flat["variant"].startswith("xor"):
-        bl = flat["bl"][s]
-        f = (h ^ (h >> np.uint64(32))).astype(fp.dtype)
-        g0 = off + (((h & m32) * bl) >> np.uint64(32)).astype(np.int64)
-        g1 = off + bl.astype(np.int64) + (
-            ((rotl64(h, 21) & m32) * bl) >> np.uint64(32)
-        ).astype(np.int64)
-        g2 = off + 2 * bl.astype(np.int64) + (
-            ((rotl64(h, 42) & m32) * bl) >> np.uint64(32)
-        ).astype(np.int64)
-        out = f == (fp[g0] ^ fp[g1] ^ fp[g2])
-    else:
-        sl = flat["sl"][s]
-        mask = flat["mask"][s]
-        f = (h ^ (h >> np.uint64(32))).astype(fp.dtype)
-        # u32 addressing arithmetic is exact in u64: indices < 2^32, no wrap
-        h0 = mulhi(h, flat["scl"][s])
-        if flat["arity"] == 4:
-            # 4-wise addressing (hashing.fuse4_hash_all): disjoint 18-bit
-            # windows at shifts 36/18/0; mask < 2^18 makes the explicit
-            # low-54-bit truncation a no-op here
-            h1 = (h0 + sl) ^ ((h >> np.uint64(36)) & mask)
-            h2 = (h0 + sl + sl) ^ ((h >> np.uint64(18)) & mask)
-            h3 = (h0 + sl + sl + sl) ^ (h & mask)
-            acc = f ^ fp[off + h3.astype(np.int64)]
-        else:
-            h1 = (h0 + sl) ^ ((h >> np.uint64(18)) & mask)
-            h2 = (h0 + sl + sl) ^ (h & mask)
-            acc = f
-        g0 = off + h0.astype(np.int64)
-        g1 = off + h1.astype(np.int64)
-        g2 = off + h2.astype(np.int64)
-        out = (acc ^ fp[g0] ^ fp[g1] ^ fp[g2]) == 0
-    return out & flat["present"][s]  # empty shard -> definitely not a member
-
-
 # One (hash_strategy, Broadcast | None) per bank DataFrame object: the first
 # probe of a bank collects, flattens and broadcasts it, and later probes of
 # the same object reuse that broadcast and start no job.  A Broadcast is never
@@ -698,7 +551,7 @@ def contains(
     if state is None:
         rows = bank.collect()
         sc = df.sparkSession.sparkContext
-        b = sc.broadcast(_bank_to_flat(rows)) if rows else None
+        b = sc.broadcast(bank_to_flat(rows)) if rows else None
         state = (rows[0]["hash_strategy"] if rows else None, b)
         _PROBE_STATE[bank] = state
     hash_strategy, b = state
@@ -708,7 +561,7 @@ def contains(
     @F.pandas_udf(T.BooleanType())
     def _probe(digests: pd.Series) -> pd.Series:
         d = digests.to_numpy(dtype=np.int64)
-        return pd.Series(_lookup_flat(b.value, d))
+        return pd.Series(lookup_flat(b.value, d))
 
     dig = digest_col(key_col, hash_strategy)
     hit = F.when(dig.isNotNull(), _probe(F.coalesce(dig, F.lit(0))))
@@ -721,13 +574,12 @@ def contains_join(
     bank: DataFrame,
     out_col: str = "contains",
     payload: str = "auto",
-    join_back: str = "auto",
 ) -> DataFrame:
     """Shard-aligned cogroup probe for banks too large to broadcast.
 
-    Routing: with both ``payload`` and ``join_back`` left at ``'auto'``, a
-    bank whose optimized-plan size estimate lies between 0 and the
-    session's ``spark.sql.autoBroadcastJoinThreshold`` (the test Spark's
+    Routing: with ``payload`` left at ``'auto'``, a bank whose
+    optimized-plan size estimate lies between 0 and the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (the test Spark's
     join planner uses to broadcast a join side; ``-1`` disables it) is
     probed by ``contains``: no probe-side shuffle and no cogroup, with the
     same answers and the same non-null ``out_col`` as the cogroup plans.
@@ -737,8 +589,8 @@ def contains_join(
     that object, so later routed calls start no job; a bank rewritten in
     place is seen only through a fresh ``read_bank``, and each bank object
     leaves one driver temp file.  An explicit ``payload``
-    (``'rows'``/``'digest'``) or ``join_back`` (``'broadcast'``/
-    ``'shuffle'``) always keeps the cogroup plan described below.
+    (``'rows'``/``'digest'``) always keeps the cogroup plan described
+    below.
 
     Probes and bank rows co-partition on the shard id, so a 10^12-key bank
     never has to fit on one machine.  Two plan shapes, chosen by
@@ -764,28 +616,20 @@ def contains_join(
       string key — always picks 'rows': the key IS the freight either way,
       and 'rows' skips the join-back.)
 
-    ``join_back`` governs how the digest path's hit table reaches the full
-    rows.  ``'auto'`` (default): no hint — with AQE on, Spark sees the hit
-    table's ACTUAL runtime size after the cogroup stage and converts the
-    join to broadcast (+ local shuffle read on the probe side) exactly
-    when it is small enough; a large hit set stays a parallel shuffled
-    join.  Measured at 10M probes / ~5M hits on local[32], forcing
-    broadcast cost 11.4s (driver-side collect + single-threaded hash-
-    relation build of a 10M-row table) vs 2.5s unhinted — the runtime-
-    stats decision is the one that survives both regimes.  ``'broadcast'``:
-    force the hint — guarantees the probe table is never shuffled, for
-    clusters where probe-side shuffle I/O is the binding constraint and
-    the distinct-hit set is known small (≲10^7).  ``'shuffle'``: force a
-    digest-keyed sort-merge join — the ≥10^8-10^9-distinct-probes regime
-    where a broadcast build could never fit the driver.
+    The digest path's join-back carries no hint: with AQE on, Spark sees
+    the hit table's ACTUAL runtime size after the cogroup stage and
+    converts the join to broadcast (+ local shuffle read on the probe
+    side) exactly when it is small enough, and a large hit set stays a
+    parallel shuffled join.  Measured at 10M probes / ~5M hits on
+    local[32], a forced broadcast cost 11.4s (driver-side collect +
+    single-threaded hash-relation build of a 10M-row table) vs 2.5s
+    unhinted.
     """
     if payload not in ("auto", "rows", "digest"):
         raise ValueError("payload must be 'auto', 'rows' or 'digest'")
-    if join_back not in ("auto", "broadcast", "shuffle"):
-        raise ValueError("join_back must be 'auto', 'broadcast' or 'shuffle'")
-    if payload == "auto" and join_back == "auto" and _fits_broadcast(bank):
-        return contains(df, key_col, bank, out_col)
     if payload == "auto":
+        if _fits_broadcast(bank):
+            return contains(df, key_col, bank, out_col)
         key_names = {
             c for c in (key_col if isinstance(key_col, (list, tuple)) else [key_col])
             if isinstance(c, str)
@@ -816,7 +660,7 @@ def contains_join(
         if bank_pdf.empty:
             return pd.DataFrame({DIGEST: d[:0]})
         shard = int(bank_pdf["shard"].iloc[0])
-        res = _lookup_flat(_bank_to_flat(bank_pdf.to_dict("records")), d, shard)
+        res = lookup_flat(bank_to_flat(bank_pdf.to_dict("records")), d, shard)
         return pd.DataFrame({DIGEST: d[res]})
 
     hits = (
@@ -825,10 +669,6 @@ def contains_join(
         .applyInPandas(probe_group, hit_schema)
         .withColumn(hit_col, F.lit(True))
     )
-    if join_back == "broadcast":
-        hits = F.broadcast(hits)
-    elif join_back == "shuffle":
-        hits = hits.hint("merge")
     return (
         keyed.join(hits, on=DIGEST, how="left")
         .withColumn(out_col, F.coalesce(F.col(hit_col), F.lit(False)))
@@ -887,7 +727,7 @@ def _contains_join_rows(
             return out
         d = probe_pdf[DIGEST].to_numpy(dtype=np.int64, na_value=0)
         shard = int(bank_pdf["shard"].iloc[0])
-        res = _lookup_flat(_bank_to_flat(bank_pdf.to_dict("records")), d, shard)
+        res = lookup_flat(bank_to_flat(bank_pdf.to_dict("records")), d, shard)
         res[probe_pdf[DIGEST].isna().to_numpy()] = False
         out[out_col] = res
         return out
@@ -1001,7 +841,9 @@ def write_bank_tl2(bank: DataFrame, dir_path: str) -> int:
 def read_bank_tl2(spark: SparkSession, dir_path: str) -> DataFrame:
     """Rebuild a bank DataFrame from raw ^TL2 shard files (reference
     read_file, src/xor8/filter.rs:253-260) — parsed executor-side from the
-    ``binaryFile`` source."""
+    ``binaryFile`` source.  A file without this library's metadata (written
+    by the Rust crate, or a V1 file) reads as shard 0 of a one-shard bank
+    over SipHash-1-3 digests, the crate's default hasher."""
     import json
     import os
 
@@ -1033,7 +875,10 @@ def read_bank_tl2(spark: SparkSession, dir_path: str) -> DataFrame:
                         "duplicates": int(meta.get("duplicates", 0)),
                         "build_ms": 0.0,
                         "num_shards": int(meta.get("num_shards", 1)),
-                        "hash_strategy": meta.get("hash_strategy", "xxhash64"),
+                        # no metadata: a file the Rust crate wrote with
+                        # its BuildHasherDefault (SipHash-1-3), whose hasher
+                        # payload is empty, or a V1 file, which has none
+                        "hash_strategy": meta.get("hash_strategy", "siphash13"),
                     }
                 )
             if rows:

@@ -29,6 +29,7 @@ _M1 = np.uint64(0xFF51AFD7ED558CCD)
 _M2 = np.uint64(0xC4CEB9FE1A85EC53)
 _U33 = np.uint64(33)
 _U32 = np.uint64(32)
+_M32 = np.uint64(MASK32)
 
 # splitmix64 constants (scalar path only — seeds are per-shard scalars)
 _SM_GAMMA = 0x9E3779B97F4A7C15
@@ -92,9 +93,13 @@ def mixsplit(keys: np.ndarray, seed: int) -> np.ndarray:
     return murmur64(keys.astype(np.uint64) + np.uint64(seed & MASK64))
 
 
-def reduce32(hash32: np.ndarray, n: int) -> np.ndarray:
-    """Lemire fast-range: map 32-bit hashes uniformly into [0, n)."""
-    return ((hash32.astype(np.uint64) * np.uint64(n)) >> _U32).astype(np.uint32)
+def reduce32(hashes: np.ndarray, n) -> np.ndarray:
+    """Lemire fast-range: map the low 32 bits of each uint64 hash uniformly
+    into [0, n), as uint64.  ``n`` is a uint64 scalar or per-row array."""
+    r = hashes & _M32
+    r *= n
+    r >>= _U32
+    return r
 
 
 def fingerprint64(h: np.ndarray) -> np.ndarray:
@@ -104,7 +109,9 @@ def fingerprint64(h: np.ndarray) -> np.ndarray:
 
 def rotl64(h: np.ndarray, c: int) -> np.ndarray:
     c = np.uint64(c)
-    return (h << c) | (h >> (np.uint64(64) - c))
+    r = h << c
+    r |= h >> (np.uint64(64) - c)
+    return r
 
 
 def mulhi(a: np.ndarray, b) -> np.ndarray:
@@ -248,14 +255,35 @@ def fuse4_hash_all(
     return h0, h1, h2, h3
 
 
-def xor8_hash_all(hashes: np.ndarray, block_length: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def xor8_hash_all(hashes: np.ndarray, block_length) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Slot indices for xor8: Lemire-reduced rotations into 3 disjoint blocks
-    (reference src/xor8/filter.rs:166-217).  Returned h1/h2 are block-local;
-    add block_length offsets for global addressing."""
-    h0 = reduce32(hashes.astype(np.uint32), block_length)
-    h1 = reduce32(rotl64(hashes, 21).astype(np.uint32), block_length)
-    h2 = reduce32(rotl64(hashes, 42).astype(np.uint32), block_length)
+    (reference src/xor8/filter.rs:166-217), as uint64.  Returned h1/h2 are
+    block-local; ``xor8_slots`` adds the block offsets."""
+    bl = np.asarray(block_length, dtype=np.uint64)
+    h0 = reduce32(hashes, bl)
+    h1 = reduce32(rotl64(hashes, 21), bl)
+    h2 = reduce32(rotl64(hashes, 42), bl)
     return h0, h1, h2
+
+
+# Global slot indices: the one addressing the builders peel with and every
+# lookup (kernels/lookup.py) probes with.  Geometry values may be scalars or
+# per-row arrays (a mixed-shard probe batch gathers them per row).
+
+def xor8_slots(hashes: np.ndarray, block_length) -> tuple[np.ndarray, ...]:
+    """``xor8_hash_all`` with each block's offset added, as int64."""
+    bl = np.asarray(block_length, dtype=np.uint64)
+    h0, h1, h2 = xor8_hash_all(hashes, bl)
+    h1 += bl
+    h2 += bl
+    h2 += bl
+    return h0.view(np.int64), h1.view(np.int64), h2.view(np.int64)
+
+
+def fuse_slots(hashes: np.ndarray, geom: dict, arity: int = 3) -> tuple[np.ndarray, ...]:
+    """Binary-fuse slot indices for arity 3 or 4 (their segments are
+    consecutive, so the indices are already global)."""
+    return fuse_hash_all(hashes, geom) if arity == 3 else fuse4_hash_all(hashes, geom)
 
 
 # ---------------------------------------------------------------------------

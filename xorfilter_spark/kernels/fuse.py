@@ -41,12 +41,12 @@ import pandas as pd
 from ..hashing import (
     FUSE_RNG_COUNTER,
     fingerprint64,
-    fuse4_hash_all,
     fuse_geometry,
-    fuse_hash_all,
+    fuse_slots,
     mixsplit,
     seed_sequence,
 )
+from .lookup import lookup_one
 
 MAX_ITERATIONS = 100  # reference src/fuse8.rs:26
 
@@ -57,16 +57,6 @@ class FuseBuildError(RuntimeError):
 
 def _mod3(x: np.ndarray) -> np.ndarray:
     return np.where(x > 2, x - 3, x)
-
-
-def _slots(hashes: np.ndarray, geom: dict, arity: int) -> np.ndarray:
-    """(arity, n) slot indices via the batch addressing
-    (src/fuse8.rs:182-191 for 3-wise; fuse4_hash_all for 4-wise)."""
-    hs = fuse_hash_all(hashes, geom) if arity == 3 else fuse4_hash_all(hashes, geom)
-    out = np.empty((arity, hashes.size), dtype=np.int64)
-    for i, h in enumerate(hs):
-        out[i] = h
-    return out
 
 
 def _peel(hashes: np.ndarray, geom: dict, arity: int = 3):
@@ -89,7 +79,8 @@ def _peel(hashes: np.ndarray, geom: dict, arity: int = 3):
         z = np.empty(0, dtype=np.int64)
         return z, z, [], np.empty((arity, 0), dtype=np.int64)
 
-    slots = _slots(hashes, geom, arity)
+    # (arity, n) slot indices (src/fuse8.rs:182-191 for 3-wise)
+    slots = np.array(fuse_slots(hashes, geom, arity), dtype=np.int64)
     all_idx = np.arange(size, dtype=np.uint64)
 
     cnt = np.zeros(capacity, dtype=np.int64)
@@ -226,22 +217,8 @@ def build_fuse(digests: np.ndarray, fp_bits: int = 8, arity: int = 3) -> dict:
 def lookup_fuse(digests: np.ndarray, seed: int, segment_length: int,
                 segment_count: int, fingerprints: np.ndarray,
                 arity: int = 3) -> np.ndarray:
-    """Vectorized probe (reference src/fuse8.rs:543-551; 4-wise adds one
-    more fingerprint gather)."""
-    digests = np.asarray(digests).astype(np.uint64)
-    if digests.size == 0:
-        return np.zeros(0, dtype=bool)
-    geom = {
-        "segment_length": segment_length,
-        "segment_length_mask": segment_length - 1,
-        "segment_count": segment_count,
-        "segment_count_length": segment_count * segment_length,
-    }
-    fp = np.asarray(fingerprints)
-    h = mixsplit(digests, seed)
-    f = fingerprint64(h).astype(fp.dtype)
-    acc = f
-    hs = fuse_hash_all(h, geom) if arity == 3 else fuse4_hash_all(h, geom)
-    for hi in hs:
-        acc = acc ^ fp[hi]
-    return acc == 0
+    """Vectorized probe of one filter (reference src/fuse8.rs:543-551;
+    4-wise adds one more fingerprint gather): the bank lookup over a
+    one-shard bank."""
+    return lookup_one(digests, "fuse", seed, fingerprints, arity,
+                      segment_length=segment_length, segment_count=segment_count)

@@ -38,18 +38,9 @@ from ..hashing import (
     mixsplit,
     seed_sequence,
     xor8_geometry,
-    xor8_hash_all,
+    xor8_slots,
 )
-
-
-def _trio(hashes: np.ndarray, block_length: int) -> np.ndarray:
-    """(3, n) global slot indices for each hash."""
-    h0, h1, h2 = xor8_hash_all(hashes, block_length)
-    trio = np.empty((3, hashes.size), dtype=np.int64)
-    trio[0] = h0
-    trio[1] = h1.astype(np.int64) + block_length
-    trio[2] = h2.astype(np.int64) + 2 * block_length
-    return trio
+from .lookup import lookup_one
 
 
 def _peel(digests: np.ndarray, seed: int, block_length: int):
@@ -73,7 +64,7 @@ def _peel(digests: np.ndarray, seed: int, block_length: int):
         return e, np.empty((3, 0), dtype=np.int64), z, z, []
 
     h = mixsplit(digests, seed)
-    slots = _trio(h, block_length)  # (3, size), computed once per attempt
+    slots = np.array(xor8_slots(h, block_length))  # (3, size), once per attempt
     all_idx = np.arange(size, dtype=np.uint64)
 
     xor_mask = np.zeros(capacity, dtype=np.uint64)
@@ -215,18 +206,6 @@ def build_xor8(digests: np.ndarray, fp_bits: int = 8) -> dict:
 
 
 def lookup_xor8(digests: np.ndarray, seed: int, block_length: int, fingerprints: np.ndarray) -> np.ndarray:
-    """Vectorized probe (reference src/xor8/filter.rs:166-176)."""
-    digests = np.asarray(digests).astype(np.uint64)
-    if digests.size == 0:
-        return np.zeros(0, dtype=bool)
-    fp = np.asarray(fingerprints)
-    if fp.dtype not in (np.dtype(np.uint8), np.dtype("<u2")):
-        fp = fp.astype(np.uint8)
-    h = mixsplit(digests, seed)
-    f = fingerprint64(h).astype(fp.dtype)
-    h0, h1, h2 = xor8_hash_all(h, block_length)
-    return f == (
-        fp[h0]
-        ^ fp[h1.astype(np.int64) + block_length]
-        ^ fp[h2.astype(np.int64) + 2 * block_length]
-    )
+    """Vectorized probe of one filter (reference src/xor8/filter.rs:166-176):
+    the bank lookup over a one-shard bank."""
+    return lookup_one(digests, "xor", seed, fingerprints, block_length=block_length)
